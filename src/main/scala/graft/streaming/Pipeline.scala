@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.DataType
@@ -78,12 +78,19 @@ final class Pipeline(
     /** Publish with content-derived idempotence keys: a batch replayed
       * after crash-before-checkpoint re-publishes the same keys and the
       * bus absorbs them — effective exactly-once, vs the reference's
-      * duplicates (§2-D). Keys are (pipeline identity, batchId, content
-      * hash position) — see `start()` — so they are stable under
-      * shuffling transforms AND scoped per pipeline (two pipelines
-      * sharing an output topic, or a restart with a fresh checkpoint dir,
-      * never collide on keys). Requires only that the transform is
-      * deterministic as a multiset of rows per batch. */
+      * duplicates (§2-D). A row's key is (pipeline identity, batchId,
+      * content hash, rank among the batch's rows with that hash) — see
+      * [[Pipeline.idempotenceKeys]] — so it depends only on the batch's
+      * row multiset: stable under shuffling transforms and under any
+      * partition count, and scoped per pipeline (two pipelines sharing
+      * an output topic, or a restart with a fresh checkpoint dir, never
+      * collide on keys). Requires only that the transform is
+      * deterministic as a multiset of rows per batch.
+      *
+      * Upgrade effect: keys used to be (pipeline identity, batchId,
+      * partition id, index). A batch published by a build with the old
+      * keys and replayed by this one (a crash that spans the upgrade) is
+      * re-published once, because its keys differ. */
     idempotent: Boolean = false,
     /** Micro-batch read parallelism of the bus source (slices per offset
       * range); the reference reads each pull single-threaded. */
@@ -118,14 +125,6 @@ final class Pipeline(
       * at-least-once replay contract unchanged). */
     startAtCommitted: Boolean = false) {
 
-  /** Stable pipeline identity for idempotence-key namespacing: derived
-    * from the checkpoint location, which is exactly the unit that defines
-    * "the same logical pipeline" across restarts. */
-  private val pipelineId: String =
-    java.util.UUID.nameUUIDFromBytes(
-      checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .toString.take(8)
-
   /** The streaming DataFrame: payload column is `payload`, plus the bus
     * metadata columns (ackId/messageId/publishTime/attributes). */
   def stream(): DataFrame =
@@ -149,79 +148,15 @@ final class Pipeline(
     *
     * Acking: the engine only invokes `MicroBatchStream.commit()` lazily
     * (when planning a later batch), so a bounded run would finish with the
-    * last batch published-but-unacked. The listener below acks on every
+    * last batch published-but-unacked. The shared sink
+    * ([[Pipeline.startPublish]]) registers a listener that acks on every
     * `QueryProgress` event — emitted after the batch's offset/commit logs
     * are durable and `foreachBatch` (the publish) returned, which is
     * precisely the reference's "ack only after successful publish"
     * (`pubsub_pipeline.py:82-84`) ordering, with a WAL under it. */
-  def start(availableNow: Boolean = false): StreamingQuery = {
-    val out = transform(stream())
-    val ackListener = new AckOnCommitListener(spark, subscription, busSpec)
-    spark.streams.addListener(ackListener)
-    // if start() itself throws, unregister the listener — an unbound
-    // listener would buffer every future query's progress events forever
-    val q = try {
-      out
-        .select(serde.serialize(struct(out.columns.map(col).toIndexedSeq: _*)).as("data"))
-        .writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(0))
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val topic = outTopic
-          val pipe = pipelineId
-          val busLocal = busSpec // capture the STRING, resolve per executor
-          // Executor-side publish: no collect-to-driver. On the in-memory
-          // bus this is same-JVM; against a real service each partition
-          // holds one publisher client.
-          if (idempotent) {
-            // Replay-stable keys: a row's key must not depend on which
-            // physical partition/index it lands in, because shuffle block
-            // fetch order varies across replays and an index-based key
-            // would bind to a DIFFERENT row on replay (silent drop = data
-            // loss). Fix: repartition + sort by CONTENT, so (pid, idx) is
-            // a pure function of the batch's row multiset — equal-content
-            // rows are interchangeable, everything else has a stable slot.
-            // The partition count is PINNED (not spark.sql.shuffle
-            // .partitions): a replay after restart under a different
-            // shuffle-partition setting must rebind every (pid, i) to the
-            // same row, or the whole batch re-publishes under new keys
-            // (advisor finding). Costs one extra shuffle per batch.
-            batch
-              .withColumn("__h", xxhash64(col("data")))
-              .repartition(Pipeline.IdempotentKeyPartitions, col("__h"))
-              .sortWithinPartitions(col("__h"), col("data"))
-              .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-                val pid = org.apache.spark.TaskContext.getPartitionId()
-                var i = 0L
-                val bus = BusRegistry.resolve(busLocal)
-                // chunked batch publish: one wire round trip per chunk
-                // on the socket transport instead of one per ROW (keys
-                // stay (pid, running index) — chunking preserves the
-                // sorted iteration order the key contract needs)
-                rows.grouped(Pipeline.PublishChunkRows).foreach { chunk =>
-                  val keyed = chunk.map { r =>
-                    val k = s"$pipe-$batchId-$pid-$i"
-                    i += 1
-                    (k, r.getAs[Array[Byte]](0))
-                  }
-                  bus.publishIdempotentBatch(topic, keyed)
-                }
-              }
-          } else {
-            batch.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-              val bus = BusRegistry.resolve(busLocal)
-              rows.grouped(Pipeline.PublishChunkRows).foreach(chunk =>
-                bus.publishBatch(topic, chunk.map(_.getAs[Array[Byte]](0))))
-            }
-          }
-        }
-        .start()
-    } catch {
-      case e: Throwable => spark.streams.removeListener(ackListener); throw e
-    }
-    ackListener.bind(q.runId)
-    q
-  }
+  def start(availableNow: Boolean = false): StreamingQuery =
+    Pipeline.startPublish(transform(stream()), serde.serialize, subscription,
+      outTopic, busSpec, checkpointDir, availableNow, idempotent)
 
   /** Graceful shutdown between micro-batches — the engine's
     * `GracefulKiller` (`pubsub_pipeline.py:15-24,147-154`): a JVM
@@ -234,13 +169,109 @@ final class Pipeline(
 }
 
 object Pipeline {
-  /** Fixed partition count for idempotence-key derivation — deliberately
-    * NOT `spark.sql.shuffle.partitions`, which can change between a run
-    * and its replay-after-restart and would rebind every (pid, i) key. */
-  val IdempotentKeyPartitions = 64
-
   /** Rows per publish batch in the executor sinks — bounds per-chunk
     * memory while amortizing the socket transport's per-call connection
     * (Bus.publishBatch) across hundreds of rows. */
   val PublishChunkRows = 512
+
+  /** Stable pipeline identity for idempotence-key namespacing: derived
+    * from the checkpoint location, which is exactly the unit that defines
+    * "the same logical pipeline" across restarts. */
+  private def pipelineId(checkpointDir: String): String =
+    java.util.UUID.nameUUIDFromBytes(
+      checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .toString.take(8)
+
+  /** The publish+ack half shared by [[Pipeline]] and [[PyPipeline]]:
+    * serializes every column of the already-transformed streaming frame
+    * `out` into one `data` payload per row, publishes each micro-batch
+    * from the executors (no collect-to-driver), and acks `subscription`
+    * on each durable batch through [[AckOnCommitListener]]. */
+  private[streaming] def startPublish(
+      out: DataFrame, serialize: Column => Column, subscription: String,
+      outTopic: String, busSpec: String, checkpointDir: String,
+      availableNow: Boolean, idempotent: Boolean): StreamingQuery = {
+    val spark = out.sparkSession
+    val pipe = pipelineId(checkpointDir)
+    val ackListener = new AckOnCommitListener(spark, subscription, busSpec)
+    spark.streams.addListener(ackListener)
+    // if start() itself throws, unregister the listener — an unbound
+    // listener would buffer every future query's progress events forever
+    val q = try {
+      out
+        .select(serialize(struct(out.columns.map(col).toIndexedSeq: _*)).as("data"))
+        .writeStream
+        .option("checkpointLocation", checkpointDir)
+        .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(0))
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          // Executor-side publish: no collect-to-driver. On the in-memory
+          // bus this is same-JVM; against a real service each partition
+          // holds one publisher client. The closures capture the bus SPEC
+          // string; every executor resolves its own transport.
+          if (idempotent) {
+            val prefix = s"$pipe-$batchId-"
+            byContent(batch, spark.sparkContext.defaultParallelism)
+              .foreachPartition { rows: Iterator[Row] =>
+                val bus = BusRegistry.resolve(busSpec)
+                // chunked batch publish: one wire round trip per chunk on
+                // the socket transport instead of one per ROW
+                ranked(rows).grouped(PublishChunkRows).foreach(chunk =>
+                  bus.publishIdempotentBatch(outTopic,
+                    chunk.map { case (k, d) => (prefix + k, d) }))
+              }
+          } else {
+            batch.foreachPartition { rows: Iterator[Row] =>
+              val bus = BusRegistry.resolve(busSpec)
+              rows.grouped(PublishChunkRows).foreach(chunk =>
+                bus.publishBatch(outTopic, chunk.map(_.getAs[Array[Byte]](0))))
+            }
+          }
+        }
+        .start()
+    } catch {
+      case e: Throwable => spark.streams.removeListener(ackListener); throw e
+    }
+    ackListener.bind(q.runId)
+    q
+  }
+
+  // Idempotence keys. A row's key must not depend on which physical
+  // partition or position it lands in: shuffle block fetch order varies
+  // across replays, and a replay may run with a different parallelism, so
+  // a position-based key would bind to a DIFFERENT row on replay (silent
+  // drop = data loss) or re-publish the batch under new keys. The key is
+  // instead (h, r): h = xxhash64(data), r = the row's rank among the
+  // batch's rows with the same h, in `data` order. Hash-partitioning on h
+  // puts every row with a given h in one partition, sorted by (h, data),
+  // so r is a counter that resets whenever h changes — a pure function of
+  // the batch's row multiset whatever the partition count. Equal payloads
+  // are interchangeable; distinct payloads whose h collides still get
+  // distinct ranks, so a collision cannot drop a row. The width is free,
+  // so it follows the cores: one key-shuffle task per core.
+
+  /** The batch's `data` column hash-partitioned into `width` partitions
+    * and sorted by content: columns (h, data). */
+  private def byContent(batch: DataFrame, width: Int): DataFrame =
+    batch.select(xxhash64(col("data")).as("h"), col("data"))
+      .repartition(width, col("h"))
+      .sortWithinPartitions(col("h"), col("data"))
+
+  /** (h, r) keys over one partition of [[byContent]]: rows arrive sorted
+    * by (h, data), so the rank restarts at 0 whenever h changes. */
+  private[streaming] def ranked(rows: Iterator[Row]): Iterator[(String, Array[Byte])] = {
+    var prev = 0L
+    var r = -1L
+    rows.map { row =>
+      val h = row.getLong(0)
+      r = if (r >= 0 && h == prev) r + 1 else 0
+      prev = h
+      (s"${java.lang.Long.toHexString(h)}-$r", row.getAs[Array[Byte]](1))
+    }
+  }
+
+  /** The key derivation as a pure function of (batch, width): every row
+    * of `batch` (a `data` binary column) with its key, less the
+    * `pipelineId-batchId-` prefix the sink adds. Equal for every `width`. */
+  private[streaming] def idempotenceKeys(batch: DataFrame, width: Int): Seq[(String, Array[Byte])] =
+    byContent(batch, width).rdd.mapPartitions(ranked).collect().toSeq
 }

@@ -44,6 +44,24 @@ class PipelineSpec extends SparkSpec {
     InMemoryBus.committedOffset(sub)
   }
 
+  /** Simulate "published, then crashed with both the epoch commit AND
+    * the acks lost" — the reference's §2-D duplicate window
+    * (pubsub_pipeline.py:48-52): drop batch 0's commit record and rewind
+    * the bus acks so a restart on `ckpt` redelivers batch 0. */
+  private def crashBeforeCommit(inSub: String, ckpt: java.nio.file.Path,
+                                q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    InMemoryBus.rewindCommitted(inSub, 0)
+    java.nio.file.Files.delete(ckpt.resolve("commits").resolve("0"))
+    // the local FS keeps a Hadoop checksum shadow; leaving it behind
+    // makes the commit-log rewrite look like a concurrent writer
+    java.nio.file.Files.deleteIfExists(ckpt.resolve("commits").resolve(".0.crc"))
+    // wait for q's checkpoint lease to be released before restarting
+    val deadline = System.currentTimeMillis + 20000
+    while (System.currentTimeMillis < deadline &&
+      spark.streams.active.exists(_.runId == q.runId)) Thread.sleep(50)
+    Thread.sleep(250)
+  }
+
   private def identityPipeline(inSub: String, outTopic: String,
                                bulkLimit: Int = 20): Pipeline =
     new Pipeline(
@@ -155,20 +173,7 @@ class PipelineSpec extends SparkSpec {
       val q1 = pipe().start(availableNow = true)
       q1.awaitTermination(60000)
       assert(InMemoryBus.payloads(outSub).size === 3)
-      // simulate "published, then crashed with both the epoch commit AND
-      // the acks lost" — the reference's §2-D duplicate window
-      // (pubsub_pipeline.py:48-52): drop the batch's commit record and
-      // rewind the bus acks so restart redelivers batch 0
-      InMemoryBus.rewindCommitted(inSub, 0)
-      java.nio.file.Files.delete(ckpt.resolve("commits").resolve("0"))
-      // the local FS keeps a Hadoop checksum shadow; leaving it behind
-      // makes the commit-log rewrite look like a concurrent writer
-      java.nio.file.Files.deleteIfExists(ckpt.resolve("commits").resolve(".0.crc"))
-      // wait for q1's checkpoint lease to be released before restarting
-      val deadline = System.currentTimeMillis + 20000
-      while (System.currentTimeMillis < deadline &&
-        spark.streams.active.exists(_.runId == q1.runId)) Thread.sleep(50)
-      Thread.sleep(250)
+      crashBeforeCommit(inSub, ckpt, q1)
       val q2 = pipe().start(availableNow = true)
       q2.awaitTermination(60000)
       InMemoryBus.payloads(outSub).size
@@ -180,12 +185,12 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("idempotent replay absorbed under a CHANGED shuffle-partition setting") {
-    // advisor finding: keys derived via repartition(col) bind to
-    // spark.sql.shuffle.partitions — a replay after restart under a
-    // different setting would rebind (pid, i) and re-publish the whole
-    // batch under new keys. The pinned Pipeline.IdempotentKeyPartitions
-    // makes keys independent of session config; this replays batch 0
-    // with the setting changed 32 -> 5 and expects zero duplicates.
+    // a replay after restart may run under a different session config;
+    // keys derived from a row's partition id and position would rebind
+    // and re-publish the whole batch under new keys. Keys are (content
+    // hash, rank within that hash), independent of any partition count;
+    // this replays batch 0 with the setting changed to 5 and expects
+    // zero duplicates.
     val (inTopic, inSub, outTopic, outSub) = fresh("c7-conf")
     (1 to 20).foreach(i => InMemoryBus.publish(inTopic,
       s"""{"data":"m$i","nested":{"nestedData":"x"}}""".getBytes(UTF_8)))
@@ -195,13 +200,7 @@ class PipelineSpec extends SparkSpec {
     val q1 = pipe().start(availableNow = true)
     q1.awaitTermination(60000)
     assert(InMemoryBus.payloads(outSub).size === 20)
-    InMemoryBus.rewindCommitted(inSub, 0)
-    java.nio.file.Files.delete(ckpt.resolve("commits").resolve("0"))
-    java.nio.file.Files.deleteIfExists(ckpt.resolve("commits").resolve(".0.crc"))
-    val deadline = System.currentTimeMillis + 20000
-    while (System.currentTimeMillis < deadline &&
-      spark.streams.active.exists(_.runId == q1.runId)) Thread.sleep(50)
-    Thread.sleep(250)
+    crashBeforeCommit(inSub, ckpt, q1)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "5")
     try {
@@ -210,6 +209,87 @@ class PipelineSpec extends SparkSpec {
       assert(InMemoryBus.payloads(outSub).size === 20,
         "replay under a different shuffle-partition setting produced duplicates")
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  test("idempotence keys do not depend on the key-shuffle width") {
+    import spark.implicits._
+    // repeated payloads ("a" x3, "b" x2) and distinct ones; the sink's
+    // width follows the cores, so a replay on a different machine must
+    // rebuild the same (key, payload) set
+    val payloads = Seq("a", "b", "a", "c", "a", "b") ++ (1 to 30).map(i => s"m$i")
+    val batch = payloads.map(_.getBytes(UTF_8)).toDF("data").repartition(3)
+    def keyed(width: Int): Set[(String, String)] = {
+      val ks = Pipeline.idempotenceKeys(batch, width)
+      assert(ks.size === payloads.size)
+      ks.map { case (k, d) => (k, new String(d, UTF_8)) }.toSet
+    }
+    val at1 = keyed(1)
+    assert(at1.size === payloads.size, "two rows share a key")
+    assert(keyed(4) === at1)
+    assert(keyed(64) === at1)
+    // equal payloads differ only by rank
+    assert(at1.filter(_._2 == "a").map(_._1.split('-').last) === Set("0", "1", "2"))
+  }
+
+  test("idempotence keys rank colliding hashes by payload: a collision drops no row") {
+    // distinct payloads under one hash get distinct ranks, in payload order
+    val rows = Iterator(
+      org.apache.spark.sql.Row(7L, "x".getBytes(UTF_8)),
+      org.apache.spark.sql.Row(7L, "y".getBytes(UTF_8)),
+      org.apache.spark.sql.Row(7L, "y".getBytes(UTF_8)),
+      org.apache.spark.sql.Row(9L, "x".getBytes(UTF_8)))
+    val keys = Pipeline.ranked(rows).map { case (k, d) => (k, new String(d, UTF_8)) }.toSeq
+    assert(keys === Seq("7-0" -> "x", "7-1" -> "y", "7-2" -> "y", "9-0" -> "x"))
+  }
+
+  test("equal-content rows in one idempotent batch: each is published, replay absorbed") {
+    // every input maps to the SAME output row: a key on the content hash
+    // alone would keep one of the 40, so only the rank keeps them apart
+    val (inTopic, inSub, outTopic, outSub) = fresh("c7-same")
+    (1 to 40).foreach(i => InMemoryBus.publish(inTopic,
+      s"""{"data":"m$i","nested":{"nestedData":"x"}}""".getBytes(UTF_8)))
+    val ckpt = Files.createTempDirectory("graft-ckpt")
+    def pipe() = new Pipeline(spark, inSub, outTopic, JsonSerde(payloadSchema),
+      df => df.select(lit("same").as("d")), ckpt.toString,
+      bulkLimit = 40, idempotent = true, readPartitions = 4)
+    val q1 = pipe().start(availableNow = true)
+    q1.awaitTermination(60000)
+    // all 40 in one micro-batch, so the equal rows share one batchId
+    assert(q1.recentProgress.map(_.numInputRows).max === 40)
+    assert(InMemoryBus.payloads(outSub).size === 40)
+    crashBeforeCommit(inSub, ckpt, q1)
+    val q2 = pipe().start(availableNow = true)
+    q2.awaitTermination(60000)
+    val out = InMemoryBus.payloads(outSub).map(new String(_, UTF_8))
+    assert(out.size === 40, "replay of equal-content rows was not absorbed")
+    assert(out.forall(_ === """{"d":"same"}"""))
+    assert(awaitCommitted(inSub, 40) === 40)
+  }
+
+  test("PyPipeline idempotent replay after crash-before-commit is fully absorbed") {
+    // the PySpark seam: the caller hands over an already-transformed
+    // streaming frame; the JVM publishes and acks through the same sink
+    val (inTopic, inSub, outTopic, outSub) = fresh("c7-py")
+    (1 to 5).foreach(i => InMemoryBus.publish(inTopic,
+      s"""{"data":"m$i","nested":{"nestedData":"x"}}""".getBytes(UTF_8)))
+    val ckpt = Files.createTempDirectory("graft-ckpt")
+    def start() = PyPipeline.start(
+      spark.readStream.format(graft.sources.BusProvider.format)
+        .option("subscription", inSub).load()
+        .withColumn("payload", JsonSerde(payloadSchema).deserialize(col("value")))
+        .select(col("payload.data").as("data")),
+      inSub, outTopic, "memory", ckpt.toString,
+      availableNow = true, idempotent = true)
+    val q1 = start()
+    q1.awaitTermination(60000)
+    assert(InMemoryBus.payloads(outSub).size === 5)
+    crashBeforeCommit(inSub, ckpt, q1)
+    val q2 = start()
+    q2.awaitTermination(60000)
+    // no duplicates AND no silent drops
+    val out = InMemoryBus.payloads(outSub).map(new String(_, UTF_8)).sorted
+    assert(out === (1 to 5).map(i => s"""{"data":"m$i"}"""))
+    assert(awaitCommitted(inSub, 5) === 5)
   }
 
   test("a large micro-batch is read by multiple source partitions; output and acks unchanged") {
@@ -321,13 +401,7 @@ class PipelineSpec extends SparkSpec {
     q1.awaitTermination(60000)
     assert(InMemoryBus.payloads(outSub).size === 3)
     // crash with the epoch commit and the acks both lost → batch replays
-    InMemoryBus.rewindCommitted(inSub, 0)
-    java.nio.file.Files.delete(ckpt.resolve("commits").resolve("0"))
-    java.nio.file.Files.deleteIfExists(ckpt.resolve("commits").resolve(".0.crc"))
-    val deadline = System.currentTimeMillis + 20000
-    while (System.currentTimeMillis < deadline &&
-      spark.streams.active.exists(_.runId == q1.runId)) Thread.sleep(50)
-    Thread.sleep(250)
+    crashBeforeCommit(inSub, ckpt, q1)
     val q2 = pipe().start(availableNow = true)
     q2.awaitTermination(60000)
     // replay fully absorbed: no duplicates AND no silent drops
