@@ -437,7 +437,7 @@ object GraphOps {
     // every hash aggregate in the plan achieved no reduction and only
     // paid hash-map costs, and the self-join re-ran the 67.4M-key
     // dedup FINAL aggregate + an (ok) sort once PER SIDE above the
-    // reused exchange (PairDiag: dedup+fan alone 121.6 s).
+    // reused exchange (dedup+fan alone 121.6 s).
     //
     // The shipped form is ONE streaming pipeline over one exchange —
     // no hash aggregate touches corpus-sized keys before the final
@@ -451,9 +451,10 @@ object GraphOps {
     //   explode — generated code, no join, no second pipeline) → one
     //   (a, b) count whose partial maps are fed clustered,
     //   basket-adjacent keys.
-    // PairDiag at sf10 (32 cores, autosized): 121.3 s → 13.8 s warm,
+    // At sf10 (32 cores, autosized): 121.3 s → 13.8 s warm,
     // 190 s → ~20 s cold, identical rows (row-count + support≥2
-    // cross-check stamped in the diag log, oracle hash unchanged).
+    // cross-check, oracle hash unchanged; VERDICT.md round 19). The
+    // round's sf10 run is recorded in docs/BENCH_SF10_FULL_R19.json.
     // The count stays groupBy (hash agg) — the sort-window count
     // variant measured 2× slower (28.6 s) because sorting 157M pair
     // rows costs more than upserting them into well-fed maps.

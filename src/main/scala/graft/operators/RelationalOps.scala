@@ -959,7 +959,8 @@ object Aggs {
     * the window_range_frame price-grid argument, re-proven by the
     * oracle gate every round and spec-pinned positionally equal to the
     * string-keyed form (RoundTwentyOpsSpec). Measured sf10 min-of-3
-    * interleaved (DistinctDiag): 10.3 → 8.7 s. A union-split variant
+    * interleaved: 10.3 → 8.7 s (OPTIMIZATION_r20.md; the round's sf10
+    * run is docs/BENCH_SF10_MOVERS_R20_C32.json). A union-split variant
     * (two narrow per-key distincts, no Expand) measured 7.2 s warm but
     * pays a SECOND corpus scan — rejected: the warm win is page-cache
     * local, the extra scan is what survives to remote storage

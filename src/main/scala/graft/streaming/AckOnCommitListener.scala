@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, StreamingQueryProgress, Trigger}
 
 import graft.sources.{BusRegistry, InMemoryBus}
 
@@ -50,4 +50,30 @@ private[streaming] final class AckOnCommitListener(
           }
         }
     }
+}
+
+private[streaming] object AckOnCommitListener {
+  /** Start `src` as a micro-batch query whose batches go to `onBatch` and
+    * whose durable batches ack `subscription` — the one acked-query
+    * set-up every runner shares. The listener is registered before
+    * `start()`, so no batch commit can precede it; it is removed if
+    * `start()` throws (an unbound listener would buffer every future
+    * query's progress events forever); and it is bound to the run id
+    * once the query exists. `availableNow = true` drains the backlog
+    * and stops; otherwise the query triggers back to back. */
+  def run(src: DataFrame, subscription: String, busSpec: String,
+          checkpointDir: String, availableNow: Boolean)(
+      onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
+    val spark = src.sparkSession
+    val listener = new AckOnCommitListener(spark, subscription, busSpec)
+    spark.streams.addListener(listener)
+    val q = try src.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(0))
+      .foreachBatch(onBatch)
+      .start()
+    catch { case e: Throwable => spark.streams.removeListener(listener); throw e }
+    listener.bind(q.runId)
+    q
+  }
 }

@@ -1,29 +1,32 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-
-import graft.sources.{BusProvider, BusRegistry}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Typed bulk pipeline — the engine's `BulkPubSubPipeline`
   * (`pubsub_pipeline.py:214-242`): the processor sees the whole pulled
   * batch (`List[A] => List[B]`) instead of one element at a time.
   *
+  * Like the reference, which inherits all the plumbing and overrides only
+  * the processing step (`pubsub_pipeline.py:215-231`), this is a
+  * [[Pipeline]] over raw bytes ([[BytesSerde]]) whose transform is the
+  * bulk step: a `mapPartitions` over the `value` column that deserializes
+  * a partition, hands it to `bulk` whole and serializes the results. The
+  * source, the publish sink and the ack-on-commit contract are
+  * [[Pipeline]]'s.
+  *
+  * Each partition of a micro-batch is one "bulk", bounded by `bulkLimit`
+  * admission like the reference's ≤`bulk_limit` pull. `readPartitions`
+  * defaults to 1, so one bulk = one whole pulled batch — the reference's
+  * list-at-a-time contract (`pubsub_pipeline.py:225-231`). Raising it
+  * trades that for read parallelism: each source slice of the batch
+  * becomes its own bulk.
+  *
   * The reference zips results back to input messages positionally and
   * silently drops/starves on length mismatch (`pubsub_pipeline.py:229-232`,
   * SURVEY §2-D) — here a mismatched bulk transform FAILS the batch (no
   * ack, batch replays), making the contract explicit: bulk transforms must
-  * be length-preserving.
-  *
-  * Maps to `Dataset.mapPartitions`: each micro-batch partition is one
-  * "bulk" (bounded by `bulkLimit` admission, like the reference's
-  * ≤`bulk_limit` pull), deserialized driver-free on executors.
-  *
-  * `readPartitions` defaults to 1 so one bulk = one whole pulled batch —
-  * the reference's list-at-a-time contract (`pubsub_pipeline.py:225-231`).
-  * Raising it trades that for read parallelism: each slice of the batch
-  * becomes its own bulk (still length-enforced per slice).
+  * be length-preserving (enforced per bulk).
   */
 final class BulkPipeline[A, B](
     spark: SparkSession,
@@ -36,50 +39,22 @@ final class BulkPipeline[A, B](
     bulkLimit: Int = 20,
     readPartitions: Int = 1,
     /** Bus transport spec (see [[Pipeline]]). */
-    busSpec: String = "memory") extends Serializable {
+    busSpec: String = "memory") {
 
   def start(availableNow: Boolean = false): StreamingQuery = {
     val dser = deserializer; val ser = serializer; val f = bulk
-    val topic = outTopic
-    val busLocal = busSpec
-    val ackListener = new AckOnCommitListener(spark, subscription, busSpec)
-    spark.streams.addListener(ackListener)
-    val src = spark.readStream
-      .format(BusProvider.format)
-      .option("subscription", subscription)
-      .option("bus", busSpec)
-      .option("bulkLimit", bulkLimit)
-      .option("readPartitions", readPartitions)
-      .load()
-      .select("value")
-    val q = try src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(0))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import org.apache.spark.sql.Encoders
-        val out = batch
-          .select(col("value"))
-          .as(Encoders.BINARY)
-          .mapPartitions { it =>
-            val in = it.map(dser).toSeq
-            val res = f(in)
-            // §2-D fix: enforce, don't silently zip-drop
-            require(res.size == in.size,
-              s"bulk transform must be length-preserving: got ${res.size} for ${in.size} inputs")
-            res.iterator.map(ser)
-          }(Encoders.BINARY)
-        out.foreachPartition { rows: Iterator[Array[Byte]] =>
-          val bus = BusRegistry.resolve(busLocal)
-          rows.grouped(Pipeline.PublishChunkRows).foreach(chunk =>
-            bus.publishBatch(topic, chunk.toSeq))
-        }
-      }
-      .start()
-    catch {
-      // unbound listener would buffer other queries' events forever
-      case e: Throwable => spark.streams.removeListener(ackListener); throw e
-    }
-    ackListener.bind(q.runId)
-    q
+    val transform: DataFrame => DataFrame = _.select("value")
+      .as(Encoders.BINARY)
+      .mapPartitions { it =>
+        val in = it.map(dser).toSeq
+        val res = f(in)
+        // §2-D fix: enforce, don't silently zip-drop
+        require(res.size == in.size,
+          s"bulk transform must be length-preserving: got ${res.size} for ${in.size} inputs")
+        res.iterator.map(ser)
+      }(Encoders.BINARY)
+      .toDF()
+    new Pipeline(spark, subscription, outTopic, BytesSerde, transform, checkpointDir,
+      bulkLimit, readPartitions = readPartitions, busSpec = busSpec).start(availableNow)
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.operators.DedupOps
@@ -170,21 +170,8 @@ final class MinhashMaintenance(
       .withColumn("payload", serde.deserialize(col("value")))
       .select(col("payload.doc_id").as("doc_id"),
         col("payload.text").as("text"))
-    val ackListener = new AckOnCommitListener(spark, subscription, busSpec)
-    spark.streams.addListener(ackListener)
-    val q = try {
-      src.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(if (availableNow) Trigger.AvailableNow()
-                 else Trigger.ProcessingTime(0))
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          applyBatch(batch, batchId)
-        }
-        .start()
-    } catch {
-      case e: Throwable => spark.streams.removeListener(ackListener); throw e
-    }
-    ackListener.bind(q.runId)
+    val q = AckOnCommitListener.run(src, subscription, busSpec, checkpointDir,
+      availableNow)(applyBatch)
     state.persistIdentity(q.id.toString)
     q
   }

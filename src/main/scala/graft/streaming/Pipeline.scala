@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.DataType
 
 import graft.sources.{BusProvider, BusRegistry}
@@ -45,10 +45,13 @@ final case class JsonSerde(schema: DataType, failFast: Boolean = false) extends 
     to_json(payload).cast("binary")
 }
 
-/** Identity serde: raw bytes through. */
+/** Raw-bytes serde: the message bytes come in as `payload` (and stay
+  * in `value`), and the transform's `value` column goes out as the
+  * published bytes, unchanged — so the transform must keep a binary
+  * `value` column. */
 case object BytesSerde extends Serde {
   override def deserialize(value: Column): Column = value
-  override def serialize(payload: Column): Column = payload.cast("binary")
+  override def serialize(payload: Column): Column = payload.getField("value")
 }
 
 /** The streaming runner (SURVEY §7 M4): bus-subscription in → deserialize
@@ -191,48 +194,33 @@ object Pipeline {
       out: DataFrame, serialize: Column => Column, subscription: String,
       outTopic: String, busSpec: String, checkpointDir: String,
       availableNow: Boolean, idempotent: Boolean): StreamingQuery = {
-    val spark = out.sparkSession
     val pipe = pipelineId(checkpointDir)
-    val ackListener = new AckOnCommitListener(spark, subscription, busSpec)
-    spark.streams.addListener(ackListener)
-    // if start() itself throws, unregister the listener — an unbound
-    // listener would buffer every future query's progress events forever
-    val q = try {
-      out
-        .select(serialize(struct(out.columns.map(col).toIndexedSeq: _*)).as("data"))
-        .writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(0))
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // Executor-side publish: no collect-to-driver. On the in-memory
-          // bus this is same-JVM; against a real service each partition
-          // holds one publisher client. The closures capture the bus SPEC
-          // string; every executor resolves its own transport.
-          if (idempotent) {
-            val prefix = s"$pipe-$batchId-"
-            byContent(batch, spark.sparkContext.defaultParallelism)
-              .foreachPartition { rows: Iterator[Row] =>
-                val bus = BusRegistry.resolve(busSpec)
-                // chunked batch publish: one wire round trip per chunk on
-                // the socket transport instead of one per ROW
-                ranked(rows).grouped(PublishChunkRows).foreach(chunk =>
-                  bus.publishIdempotentBatch(outTopic,
-                    chunk.map { case (k, d) => (prefix + k, d) }))
-              }
-          } else {
-            batch.foreachPartition { rows: Iterator[Row] =>
+    val data = out.select(serialize(struct(out.columns.map(col).toIndexedSeq: _*)).as("data"))
+    AckOnCommitListener.run(data, subscription, busSpec, checkpointDir, availableNow) {
+      (batch, batchId) =>
+        // Executor-side publish: no collect-to-driver. On the in-memory
+        // bus this is same-JVM; against a real service each partition
+        // holds one publisher client. The closures capture the bus SPEC
+        // string; every executor resolves its own transport.
+        if (idempotent) {
+          val prefix = s"$pipe-$batchId-"
+          byContent(batch, batch.sparkSession.sparkContext.defaultParallelism)
+            .foreachPartition { rows: Iterator[Row] =>
               val bus = BusRegistry.resolve(busSpec)
-              rows.grouped(PublishChunkRows).foreach(chunk =>
-                bus.publishBatch(outTopic, chunk.map(_.getAs[Array[Byte]](0))))
+              // chunked batch publish: one wire round trip per chunk on
+              // the socket transport instead of one per ROW
+              ranked(rows).grouped(PublishChunkRows).foreach(chunk =>
+                bus.publishIdempotentBatch(outTopic,
+                  chunk.map { case (k, d) => (prefix + k, d) }))
             }
+        } else {
+          batch.foreachPartition { rows: Iterator[Row] =>
+            val bus = BusRegistry.resolve(busSpec)
+            rows.grouped(PublishChunkRows).foreach(chunk =>
+              bus.publishBatch(outTopic, chunk.map(_.getAs[Array[Byte]](0))))
           }
         }
-        .start()
-    } catch {
-      case e: Throwable => spark.streams.removeListener(ackListener); throw e
     }
-    ackListener.bind(q.runId)
-    q
   }
 
   // Idempotence keys. A row's key must not depend on which physical

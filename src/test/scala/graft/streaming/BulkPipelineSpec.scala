@@ -47,6 +47,27 @@ class BulkPipelineSpec extends SparkSpec {
     assert(awaitCommitted(inSub, 5) === 5)
   }
 
+  test("with readPartitions > 1 each source slice of the batch is one bulk") {
+    val (inTopic, inSub, outTopic, outSub) = fresh("b5")
+    (1 to 20).foreach(i => InMemoryBus.publish(inTopic, s"v$i".getBytes(UTF_8)))
+
+    // 20 messages in one batch, read as 4 even slices of 5: no exchange or
+    // coalesce may sit between the scan and the bulk
+    val q = new BulkPipeline[String, String](
+      spark, inSub, outTopic,
+      b => new String(b, UTF_8),
+      (s: String) => s.getBytes(UTF_8),
+      batch => batch.map(s => s"$s/${batch.size}"),
+      Files.createTempDirectory("bulk-ckpt").toString,
+      bulkLimit = 20, readPartitions = 4).start(availableNow = true)
+    q.awaitTermination(60000)
+
+    val out = InMemoryBus.payloads(outSub).map(new String(_, UTF_8))
+    assert(out.size === 20)
+    assert(out.forall(_.endsWith("/5")), out)
+    assert(awaitCommitted(inSub, 20) === 20)
+  }
+
   test("non-length-preserving bulk transform fails the batch — nothing acked") {
     val (inTopic, inSub, outTopic, _) = fresh("b2")
     (1 to 3).foreach(i => InMemoryBus.publish(inTopic, s"v$i".getBytes(UTF_8)))

@@ -681,4 +681,28 @@ class PipelineSpec extends SparkSpec {
       "lost-ack recovery duplicated or dropped rows")
     assert(awaitCommitted(inSub, 6) === 6)
   }
+
+  test("BytesSerde passes raw bytes through unchanged, non-UTF-8 included") {
+    val (inTopic, inSub, outTopic, outSub) = fresh("bs")
+    val msgs = Seq(Array[Byte](-1, -2, 0, -128, 127), "plain".getBytes(UTF_8), Array[Byte](0xc3.toByte))
+    msgs.foreach(InMemoryBus.publish(inTopic, _))
+    val q = new Pipeline(spark, inSub, outTopic, BytesSerde, _.select("value"),
+      Files.createTempDirectory("graft-ckpt").toString).start(availableNow = true)
+    q.awaitTermination(60000)
+    assert(InMemoryBus.payloads(outSub).map(_.toSeq).sortBy(_.mkString(","))
+      === msgs.map(_.toSeq).sortBy(_.mkString(",")))
+    assert(awaitCommitted(inSub, 3) === 3)
+  }
+
+  test("a failed start leaves no ack listener behind") {
+    val (_, inSub, outTopic, _) = fresh("fs")
+    // a regular file where the checkpoint directory should be: start() throws
+    val notADir = Files.createTempFile("graft-ckpt", ".file").toString
+    val before = spark.streams.listListeners().toSet
+    intercept[Exception] {
+      new Pipeline(spark, inSub, outTopic, JsonSerde(payloadSchema),
+        df => df.select(col("payload.*")), notADir).start(availableNow = true)
+    }
+    assert((spark.streams.listListeners().toSet -- before).isEmpty)
+  }
 }

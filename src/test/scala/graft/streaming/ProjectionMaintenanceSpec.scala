@@ -236,4 +236,18 @@ class ProjectionMaintenanceSpec extends SparkSpec {
     assert(incr == full)
     assert(incr.nonEmpty)
   }
+
+  test("a failed start leaves no ack listener behind") {
+    val id = java.util.UUID.randomUUID().toString.take(8)
+    val topic = s"pm-fs-$id"; val sub = s"pm-fssub-$id"
+    InMemoryBus.createTopic(topic)
+    InMemoryBus.createSubscription(topic, sub)
+    // a regular file where the checkpoint directory should be: start() throws
+    val notADir = Files.createTempFile("pm-ckpt-", ".file").toString
+    val m = new ProjectionMaintenance(spark, sub,
+      Files.createTempDirectory("pm-state-").toString, notADir)
+    val before = spark.streams.listListeners().toSet
+    intercept[Exception] { m.start(availableNow = true) }
+    assert((spark.streams.listListeners().toSet -- before).isEmpty)
+  }
 }
