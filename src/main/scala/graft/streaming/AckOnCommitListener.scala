@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, StreamingQueryProgress, Trigger}
 
@@ -14,7 +15,7 @@ import graft.sources.{BusRegistry, InMemoryBus}
   * replayed by `bind()`, so no batch commit can be missed. */
 private[streaming] final class AckOnCommitListener(
     session: SparkSession, sub: String,
-    busSpec: String = "memory") extends StreamingQueryListener {
+    busSpec: String = "memory") extends StreamingQueryListener with Logging {
   // driver-side: one resolved transport for the listener's lifetime
   private val bus = BusRegistry.resolve(busSpec)
   import StreamingQueryListener._
@@ -46,7 +47,7 @@ private[streaming] final class AckOnCommitListener(
           // is WAL-protected — no redelivery, no duplicate)
           try bus.commit(sub, o.toLong)
           catch { case e: InMemoryBus.AckRpcError =>
-            System.err.println(s"[bus] ack lost on $sub (will heal): ${e.getMessage}")
+            logWarning(s"[bus] ack lost on $sub (will heal): ${e.getMessage}")
           }
         }
     }
@@ -60,20 +61,37 @@ private[streaming] object AckOnCommitListener {
     * `start()` throws (an unbound listener would buffer every future
     * query's progress events forever); and it is bound to the run id
     * once the query exists. `availableNow = true` drains the backlog
-    * and stops; otherwise the query triggers back to back. */
+    * and stops; otherwise the query triggers back to back.
+    *
+    * Unless the session already names a checkpoint manager, the query
+    * writes its checkpoint through [[LocalCheckpointFileManager]]. The
+    * conf is set only around `start()`: the query takes its checkpoint
+    * manager from the session clone `start()` makes, so the value reaches
+    * this query alone. The companion's lock keeps two concurrent starts
+    * from seeing each other's value. */
   def run(src: DataFrame, subscription: String, busSpec: String,
           checkpointDir: String, availableNow: Boolean)(
       onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
     val spark = src.sparkSession
     val listener = new AckOnCommitListener(spark, subscription, busSpec)
     spark.streams.addListener(listener)
-    val q = try src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(0))
-      .foreachBatch(onBatch)
-      .start()
-    catch { case e: Throwable => spark.streams.removeListener(listener); throw e }
+    val q = try withLocalCheckpoints(spark) {
+      src.writeStream
+        .option("checkpointLocation", checkpointDir)
+        .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(0))
+        .foreachBatch(onBatch)
+        .start()
+    } catch { case e: Throwable => spark.streams.removeListener(listener); throw e }
     listener.bind(q.runId)
     q
+  }
+
+  private def withLocalCheckpoints[T](spark: SparkSession)(start: => T): T = synchronized {
+    import LocalCheckpointFileManager.ConfKey
+    if (spark.conf.getOption(ConfKey).isDefined) start
+    else {
+      spark.conf.set(ConfKey, classOf[LocalCheckpointFileManager].getName)
+      try start finally spark.conf.unset(ConfKey)
+    }
   }
 }

@@ -1,12 +1,12 @@
 package graft.streaming
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.operators.DedupOps
-import graft.sources.BusProvider
 
 /** Incremental maintenance of the minhash near-dup pair projection
   * under document appends (VERDICT r16 #1 — the [[ProjectionMaintenance]]
@@ -57,7 +57,7 @@ final class MinhashMaintenance(
     shingleK: Int = 3,
     nHashes: Int = 32,
     rowsPerBand: Int = 4,
-    jaccardTau: Double = 0.7) {
+    jaccardTau: Double = 0.7) extends Logging {
 
   /** bytes → {doc_id, text} via the default JSON serde. */
   private val serde = JsonSerde(new StructType()
@@ -148,7 +148,7 @@ final class MinhashMaintenance(
       val bandRows = spark.read.parquet(s"$vdir/bands").count()
       val pairRows = spark.read.parquet(s"$vdir/pairs").count()
       state.commit(batchId)
-      Console.err.println(
+      logInfo(
         f"[minhash-maintenance] batch $batchId: store rows $storeRows, " +
           f"band rows $bandRows, pair rows $pairRows " +
           f"(${(System.nanoTime() - t0) / 1e9}%.2f s)")
@@ -161,13 +161,7 @@ final class MinhashMaintenance(
     * after the batch's state version and the checkpoint are durable. */
   def start(availableNow: Boolean = false): StreamingQuery = {
     state.guardIdentity(checkpointDir)
-    val src = spark.readStream
-      .format(BusProvider.format)
-      .option("subscription", subscription)
-      .option("bus", busSpec)
-      .option("bulkLimit", bulkLimit)
-      .load()
-      .withColumn("payload", serde.deserialize(col("value")))
+    val src = Pipeline.busStream(spark, subscription, busSpec, serde, "bulkLimit" -> bulkLimit)
       .select(col("payload.doc_id").as("doc_id"),
         col("payload.text").as("text"))
     val q = AckOnCommitListener.run(src, subscription, busSpec, checkpointDir,

@@ -69,6 +69,10 @@ case object BytesSerde extends Serde {
   * the checkpoint WAL instead of an in-flight future callback —
   * SURVEY §3.4). A crash between publish and checkpoint replays the
   * batch: duplicates possible, never loss (§2-D documented window).
+  *
+  * A `file:` checkpoint is written through [[LocalCheckpointFileManager]]
+  * (no forked processes, no `.crc` sidecars) unless the session sets
+  * `spark.sql.streaming.checkpointFileManagerClass`, which always wins.
   */
 final class Pipeline(
     spark: SparkSession,
@@ -131,20 +135,15 @@ final class Pipeline(
   /** The streaming DataFrame: payload column is `payload`, plus the bus
     * metadata columns (ackId/messageId/publishTime/attributes). */
   def stream(): DataFrame =
-    spark.readStream
-      .format(BusProvider.format)
-      .option("subscription", subscription)
-      .option("bus", busSpec)
-      .option("bulkLimit", bulkLimit)
-      .option("readPartitions", readPartitions)
-      .option("retryBackoffMs", retryBackoffMs)
-      .option("respectDeadline", respectDeadline)
-      .option("maxBytesPerPull", maxBytesPerPull)
-      .option("leaseMicros", leaseMicros)
-      .option("leaseHeartbeatMs", leaseHeartbeatMs)
-      .option("startAtCommitted", startAtCommitted)
-      .load()
-      .withColumn("payload", serde.deserialize(col("value")))
+    Pipeline.busStream(spark, subscription, busSpec, serde,
+      "bulkLimit" -> bulkLimit,
+      "readPartitions" -> readPartitions,
+      "retryBackoffMs" -> retryBackoffMs,
+      "respectDeadline" -> respectDeadline,
+      "maxBytesPerPull" -> maxBytesPerPull,
+      "leaseMicros" -> leaseMicros,
+      "leaseHeartbeatMs" -> leaseHeartbeatMs,
+      "startAtCommitted" -> startAtCommitted)
 
   /** Start the pipeline. `availableNow = true` gives a bounded drain-and-
     * stop run (the fixed version of `max_processed_messages`, §2-D).
@@ -176,6 +175,16 @@ object Pipeline {
     * memory while amortizing the socket transport's per-call connection
     * (Bus.publishBatch) across hundreds of rows. */
   val PublishChunkRows = 512
+
+  /** The bus source every runner reads: `subscription` over `busSpec`
+    * with the given source options (any left out keep the source's
+    * defaults), and the message bytes deserialized into `payload`. */
+  private[streaming] def busStream(spark: SparkSession, subscription: String,
+      busSpec: String, serde: Serde, options: (String, Any)*): DataFrame =
+    options.foldLeft(spark.readStream.format(BusProvider.format)
+        .option("subscription", subscription).option("bus", busSpec)) {
+      case (reader, (k, v)) => reader.option(k, v.toString)
+    }.load().withColumn("payload", serde.deserialize(col("value")))
 
   /** Stable pipeline identity for idempotence-key namespacing: derived
     * from the checkpoint location, which is exactly the unit that defines

@@ -1,12 +1,12 @@
 package graft.streaming
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
 
 import graft.operators.GraphOps
-import graft.sources.BusProvider
 
 /** Incremental maintenance of the co-purchase pair-support projection
   * under bus appends — the lakehouse "maintain the materialized view"
@@ -50,7 +50,7 @@ final class ProjectionMaintenance(
     checkpointDir: String,
     bulkLimit: Int = 1000,
     busSpec: String = "memory",
-    keepVersions: Int = 2) {
+    keepVersions: Int = 2) extends Logging {
 
   /** bytes → {l_orderkey, parts} via the default JSON serde. */
   private val serde = JsonSerde(new StructType()
@@ -209,7 +209,7 @@ final class ProjectionMaintenance(
     (math.max(0L, batchId - keepVersions - 8) to batchId - keepVersions)
       .foreach(v => spark.sql(s"DROP TABLE IF EXISTS ${tableName(v)}"))
     lastFoldShuffle.set((shufRecs.get, shufBytes.get))
-    Console.err.println(
+    logInfo(
       f"[projection-maintenance] batch $batchId: merged state rows $rows, " +
         f"fold shuffled ${shufRecs.get} rows / ${shufBytes.get >> 20} MB " +
         f"(${(System.nanoTime() - t0) / 1e9}%.2f s)")
@@ -227,13 +227,7 @@ final class ProjectionMaintenance(
     * checkpoint are both durable. */
   def start(availableNow: Boolean = false): StreamingQuery = {
     state.guardIdentity(checkpointDir)
-    val src = spark.readStream
-      .format(BusProvider.format)
-      .option("subscription", subscription)
-      .option("bus", busSpec)
-      .option("bulkLimit", bulkLimit)
-      .load()
-      .withColumn("payload", serde.deserialize(col("value")))
+    val src = Pipeline.busStream(spark, subscription, busSpec, serde, "bulkLimit" -> bulkLimit)
       .select(col("payload.l_orderkey").as("l_orderkey"),
         col("payload.parts").as("parts"))
     val q = AckOnCommitListener.run(src, subscription, busSpec, checkpointDir,

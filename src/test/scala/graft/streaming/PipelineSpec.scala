@@ -3,7 +3,10 @@ package graft.streaming
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.checkpointing.{FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -52,8 +55,10 @@ class PipelineSpec extends SparkSpec {
                                 q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     InMemoryBus.rewindCommitted(inSub, 0)
     java.nio.file.Files.delete(ckpt.resolve("commits").resolve("0"))
-    // the local FS keeps a Hadoop checksum shadow; leaving it behind
-    // makes the commit-log rewrite look like a concurrent writer
+    // a checkpoint written by Spark's default manager keeps a Hadoop
+    // checksum shadow, and leaving it behind makes that manager's
+    // commit-log rewrite look like a concurrent writer (the java.nio
+    // manager the runners install writes no shadow)
     java.nio.file.Files.deleteIfExists(ckpt.resolve("commits").resolve(".0.crc"))
     // wait for q's checkpoint lease to be released before restarting
     val deadline = System.currentTimeMillis + 20000
@@ -692,6 +697,75 @@ class PipelineSpec extends SparkSpec {
     assert(InMemoryBus.payloads(outSub).map(_.toSeq).sortBy(_.mkString(","))
       === msgs.map(_.toSeq).sortBy(_.mkString(",")))
     assert(awaitCommitted(inSub, 3) === 3)
+  }
+
+  /** File names in the checkpoint's offset and commit logs. */
+  private def logFiles(ckpt: java.nio.file.Path): Seq[String] =
+    Seq("offsets", "commits").flatMap(d =>
+      Files.list(ckpt.resolve(d)).iterator.asScala.map(_.getFileName.toString))
+
+  /** Run `body` with the session naming `managerClass` as its checkpoint
+    * manager, as a user would. */
+  private def withCheckpointManager[T](managerClass: String)(body: => T): T = {
+    spark.conf.set(LocalCheckpointFileManager.ConfKey, managerClass)
+    try body finally spark.conf.unset(LocalCheckpointFileManager.ConfKey)
+  }
+
+  test("acked queries checkpoint through the java.nio manager, only while starting, unless the session names one") {
+    def run(): (java.nio.file.Path, Option[String]) = {
+      val (inTopic, inSub, outTopic, outSub) = fresh("ckm")
+      (1 to 50).foreach(i => InMemoryBus.publish(inTopic,
+        s"""{"data":"m$i","nested":{"nestedData":"x"}}""".getBytes(UTF_8)))
+      val ckpt = Files.createTempDirectory("graft-ckpt")
+      val q = new Pipeline(spark, inSub, outTopic, JsonSerde(payloadSchema),
+        df => df.select(col("payload.*")), ckpt.toString, bulkLimit = 20).start(availableNow = true)
+      val keyWhileRunning = spark.conf.getOption(LocalCheckpointFileManager.ConfKey)
+      q.awaitTermination(60000)
+      assert(q.recentProgress.length >= 3)
+      assert(InMemoryBus.payloads(outSub).size === 50)
+      (ckpt, keyWhileRunning)
+    }
+    val (ours, keyAfter) = run()
+    assert(logFiles(ours).count(!_.startsWith(".")) >= 6)
+    assert(!logFiles(ours).exists(_.endsWith(".crc")))
+    assert(keyAfter === None)
+    // a manager the user names wins, and stays named
+    val fsBased = classOf[FileSystemBasedCheckpointFileManager].getName
+    withCheckpointManager(fsBased) {
+      val (theirs, kept) = run()
+      assert(logFiles(theirs).exists(_.endsWith(".crc")))
+      assert(kept === Some(fsBased))
+    }
+  }
+
+  test("an idempotent pipeline's checkpoint moves between Spark's default manager and the java.nio one") {
+    val (inTopic, inSub, outTopic, outSub) = fresh("ckmove")
+    def publish(ids: Range): Unit = ids.foreach(i => InMemoryBus.publish(inTopic,
+      s"""{"data":"m$i","nested":{"nestedData":"x"}}""".getBytes(UTF_8)))
+    val ckpt = Files.createTempDirectory("graft-ckpt")
+    def start() = new Pipeline(spark, inSub, outTopic, JsonSerde(payloadSchema),
+      df => df.select(col("payload.*")), ckpt.toString, idempotent = true).start(availableNow = true)
+    def finish(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+      q.awaitTermination(60000) // rethrows a checksum or concurrent-writer failure
+      assert(q.exception.isEmpty)
+    }
+    val sparkDefault = classOf[FileContextBasedCheckpointFileManager].getName
+
+    publish(1 to 10)
+    val q1 = withCheckpointManager(sparkDefault)(start())
+    finish(q1)
+    assert(logFiles(ckpt).exists(_.endsWith(".crc")))
+    // batch 0 replays under the java.nio manager, then a new batch
+    crashBeforeCommit(inSub, ckpt, q1)
+    publish(11 to 20)
+    val q2 = start()
+    finish(q2)
+    // and the default manager picks the checkpoint up again
+    publish(21 to 30)
+    finish(withCheckpointManager(sparkDefault)(start()))
+    assert(InMemoryBus.payloads(outSub).map(new String(_, UTF_8)).sorted
+      === (1 to 30).map(i => s"""{"data":"m$i","nested":{"nestedData":"x"}}""").sorted)
+    assert(awaitCommitted(inSub, 30) === 30)
   }
 
   test("a failed start leaves no ack listener behind") {
