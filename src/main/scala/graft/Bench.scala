@@ -557,7 +557,7 @@ object Bench {
     // stdout tail now fits ~450 queries instead of ~185 (the r9 registry
     // was one round from the cap). The pre-r10 object form survives for
     // history in docs/BENCH_OVERLAP_R10.json (same-run emission of both
-    // forms) and in the per-round BENCH_r{1..9} artifacts; the legend in
+    // forms) and in the per-round docs/history/BENCH_r0{1..9}.json; the legend in
     // BENCH_FULL.json keeps those decodable.
     val qv = results.map { case (_, v) =>
       if (v < 0) "-1" else math.round(v * 100).toString

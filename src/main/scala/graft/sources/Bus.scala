@@ -5,14 +5,17 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable.ArrayBuffer
 
 /** The bus surface the engine talks to (SURVEY §7 M5) — one interface,
-  * two transports:
+  * three transports:
   *
-  *  - [[InMemoryBus]]: the single-JVM test double (statics),
+  *  - [[InMemoryBus]]: the single-JVM test double, a [[BusCore]] singleton
+  *    (its methods are also JVM statics, for py4j callers),
   *  - [[SocketBus]]: a TCP client to a [[BusService]] daemon in its OWN
   *    process (round-8 verdict #1 — the ack-on-commit guarantee is the
   *    reference's core semantic and must be proven across a real process
   *    boundary, like the reference's own `test_client.py:6-31`
-  *    cross-process harness).
+  *    cross-process harness),
+  *  - [[GcpPubsubBus]]: the Pub/Sub client adapter, plugged in by scheme
+  *    through [[BusFactories]].
   *
   * Everything the connector, pipelines, and test clients do goes through
   * this trait, so the DSv2 source and the pipeline runners are
@@ -131,13 +134,13 @@ object BusRegistry {
 
 /** The bus state machine — topics, subscriptions, ordered logs with a
   * committed (acked) prefix, at-least-once redelivery, idempotent keyed
-  * publish, and the injectable fault surface. Instantiable so the
-  * [[BusService]] daemon owns a private core while [[InMemoryBus]] keeps
-  * its JVM-singleton core; the semantics (documented on [[InMemoryBus]])
-  * live here exactly once. Spark-free on purpose: the daemon runs on a
-  * bare JVM with just the library classes.
+  * publish, and the injectable fault surface. The semantics (documented
+  * on [[InMemoryBus]]) live here exactly once, with two owners: the JVM
+  * singleton [[InMemoryBus]] IS a `BusCore`, and each [[BusService]]
+  * daemon serves a private `new BusCore` over TCP. Spark-free on
+  * purpose: the daemon runs on a bare JVM with just the library classes.
   */
-final class BusCore extends Bus {
+class BusCore extends Bus {
   import InMemoryBus.{AckRpcError, BusMessage, PublishError, TransientPullError}
 
   private final class Subscription(val topic: String, val name: String) {

@@ -4,6 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -77,19 +78,16 @@ private class BusTable(props: Map[String, String]) extends Table with SupportsRe
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
           new BusMicroBatchStream(
             subscription = options.get("subscription"),
-            busSpec = Option(options.get("bus")).getOrElse("memory"),
-            bulkLimit = Option(options.get("bulkLimit")).map(_.toInt).getOrElse(20),
-            maxPullRetries = Option(options.get("maxPullRetries")).map(_.toInt).getOrElse(3),
-            readPartitions = Option(options.get("readPartitions")).map(_.toInt).getOrElse(4),
-            retryBackoffMs = Option(options.get("retryBackoffMs")).map(_.toLong).getOrElse(100L),
-            respectDeadline = Option(options.get("respectDeadline")).exists(_.toBoolean),
-            maxBytesPerPull = Option(options.get("maxBytesPerPull")).map(_.toLong)
-              .getOrElse(Long.MaxValue),
-            leaseMicros = Option(options.get("leaseMicros")).map(_.toLong).getOrElse(0L),
-            leaseHeartbeatMs = Option(options.get("leaseHeartbeatMs")).map(_.toLong)
-              .getOrElse(500L),
-            startAtCommitted = Option(options.get("startAtCommitted"))
-              .exists(_.toBoolean))
+            busSpec = options.getOrDefault("bus", "memory"),
+            bulkLimit = options.getInt("bulkLimit", 20),
+            maxPullRetries = options.getInt("maxPullRetries", 3),
+            readPartitions = options.getInt("readPartitions", 4),
+            retryBackoffMs = options.getLong("retryBackoffMs", 100L),
+            respectDeadline = options.getBoolean("respectDeadline", false),
+            maxBytesPerPull = options.getLong("maxBytesPerPull", Long.MaxValue),
+            leaseMicros = options.getLong("leaseMicros", 0L),
+            leaseHeartbeatMs = options.getLong("leaseHeartbeatMs", 500L),
+            startAtCommitted = options.getBoolean("startAtCommitted", false))
       }
     }
 }
@@ -103,12 +101,10 @@ private class BusMicroBatchStream(subscription: String, busSpec: String,
                                   bulkLimit: Int,
                                   maxPullRetries: Int, readPartitions: Int,
                                   retryBackoffMs: Long, respectDeadline: Boolean,
-                                  maxBytesPerPull: Long,
-                                  leaseMicros: Long = 0L,
-                                  leaseHeartbeatMs: Long = 500L,
-                                  startAtCommitted: Boolean = false)
+                                  maxBytesPerPull: Long, leaseMicros: Long,
+                                  leaseHeartbeatMs: Long, startAtCommitted: Boolean)
     extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow {
+    with SupportsTriggerAvailableNow with Logging {
 
   require(subscription != null, "option 'subscription' is required")
   require(readPartitions >= 1, "readPartitions must be >= 1")
@@ -280,7 +276,7 @@ private class BusMicroBatchStream(subscription: String, busSpec: String,
   override def commit(end: Offset): Unit =
     try bus.commit(subscription, end.asInstanceOf[BusOffset].offset)
     catch { case e: InMemoryBus.AckRpcError =>
-      System.err.println(s"[bus] ack lost on $subscription (will heal): ${e.getMessage}")
+      logWarning(s"[bus] ack lost on $subscription (will heal): ${e.getMessage}")
     }
 
   override def stop(): Unit = {

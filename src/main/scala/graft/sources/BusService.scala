@@ -1,7 +1,114 @@
 package graft.sources
 
-import java.io.{DataInputStream, DataOutputStream, EOFException}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException}
+import java.lang.reflect.{InvocationTargetException, Method, Modifier}
+import java.net.{InetAddress, ServerSocket, Socket, SocketException}
+
+import InMemoryBus.{AckRpcError, BusMessage, PublishError, TransientPullError}
+
+/** The socket transport's wire format, written once for both ends.
+  *
+  * Values are tagged, one tag byte per value, for exactly the types the
+  * [[Bus]] methods carry. A request is the op name (UTF) followed by its
+  * arguments as one `Seq` value; it is decoded whole before anything
+  * runs, so a failing op can never leave the rest of its request unread
+  * on the connection. A response is a status int: 0, then the result
+  * value; or 1/2/3 for the three typed bus errors and 4 for anything
+  * else, then the error message (UTF).
+  */
+private[sources] object BusWire {
+  private final val UnitTag = 0
+  private final val BooleanTag = 1
+  private final val IntTag = 2
+  private final val LongTag = 3
+  private final val StringTag = 4
+  private final val BytesTag = 5
+  private final val MapTag = 6
+  private final val SeqTag = 7
+  private final val PairTag = 8
+  private final val MessageTag = 9
+
+  def input(sock: Socket): DataInputStream =
+    new DataInputStream(new BufferedInputStream(sock.getInputStream))
+
+  def output(sock: Socket): DataOutputStream =
+    new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+
+  def write(out: DataOutputStream, v: Any): Unit = v match {
+    case () => out.writeByte(UnitTag)
+    case b: Boolean => out.writeByte(BooleanTag); out.writeBoolean(b)
+    case i: Int => out.writeByte(IntTag); out.writeInt(i)
+    case l: Long => out.writeByte(LongTag); out.writeLong(l)
+    case s: String => out.writeByte(StringTag); out.writeUTF(s)
+    case b: Array[Byte] => out.writeByte(BytesTag); out.writeInt(b.length); out.write(b)
+    case m: Map[_, _] =>
+      out.writeByte(MapTag); out.writeInt(m.size)
+      m.foreach { case (k, x) => write(out, k); write(out, x) }
+    case s: Seq[_] => out.writeByte(SeqTag); out.writeInt(s.size); s.foreach(write(out, _))
+    case m: BusMessage =>
+      out.writeByte(MessageTag)
+      write(out, m.data); write(out, m.messageId)
+      write(out, m.publishTimeMicros); write(out, m.attributes)
+    case (a, b) => out.writeByte(PairTag); write(out, a); write(out, b)
+  }
+
+  def read(in: DataInputStream): Any = in.readByte().toInt match {
+    case UnitTag => ()
+    case BooleanTag => in.readBoolean()
+    case IntTag => in.readInt()
+    case LongTag => in.readLong()
+    case StringTag => in.readUTF()
+    case BytesTag =>
+      val b = new Array[Byte](in.readInt())
+      in.readFully(b)
+      b
+    case MapTag => Map.from(Vector.fill(in.readInt())(read(in) -> read(in)))
+    case SeqTag => Vector.fill(in.readInt())(read(in))
+    case MessageTag =>
+      BusMessage(read(in).asInstanceOf[Array[Byte]], read(in).asInstanceOf[String],
+        read(in).asInstanceOf[Long], read(in).asInstanceOf[Map[String, String]])
+    case PairTag => (read(in), read(in))
+    case tag => throw new IllegalArgumentException(s"unknown bus wire tag: $tag")
+  }
+
+  def writeRequest(out: DataOutputStream, op: String, args: Seq[Any]): Unit = {
+    out.writeUTF(op)
+    write(out, args)
+    out.flush()
+  }
+
+  def readRequest(in: DataInputStream): (String, Seq[Any]) =
+    (in.readUTF(), read(in).asInstanceOf[Seq[Any]])
+
+  def writeResponse(out: DataOutputStream, result: Either[Throwable, Any]): Unit = {
+    result match {
+      case Right(v) => out.writeInt(0); write(out, v)
+      case Left(e) =>
+        out.writeInt(e match {
+          case _: TransientPullError => 1
+          case _: AckRpcError => 2
+          case _: PublishError => 3
+          case _ => 4
+        })
+        out.writeUTF(String.valueOf(e.getMessage))
+    }
+    out.flush()
+  }
+
+  /** The result value, or the bus error the status names, rethrown as
+    * the same class so callers cannot tell the transports apart. */
+  def readResponse(in: DataInputStream): Any = in.readInt() match {
+    case 0 => read(in)
+    case status =>
+      val msg = in.readUTF()
+      throw (status match {
+        case 1 => new TransientPullError(msg)
+        case 2 => new AckRpcError(msg)
+        case 3 => new PublishError(msg)
+        case _ => new IllegalStateException(s"bus service error: $msg")
+      })
+  }
+}
 
 /** Cross-process bus daemon (round-8 verdict #1): a TCP server hosting a
   * private [[BusCore]], so the DSv2 connector, the pipelines, and the
@@ -10,14 +117,13 @@ import java.net.{InetAddress, ServerSocket, Socket}
   * Spark-free: the daemon runs on a bare JVM with the library classes
   * and the Scala runtime only (see [[BusServiceMain]]).
   *
-  * Protocol: length-free framed binary over `DataInput/OutputStream` —
-  * request = op name (UTF) + op-specific fields; response = status int
-  * (0 ok; 1/2/3 the three typed bus errors; 4 anything else) + fields.
-  * The typed errors cross the wire and are RE-THROWN as the same classes
-  * by [[SocketBus]], so the connector's retry/backoff logic
-  * (`pubsub_pipeline.py:204-211` semantics) is transport-agnostic. One
-  * connection serves many requests (loop until EOF); the client may
-  * equally open one per call.
+  * Protocol: [[BusWire]]. A request names a [[Bus]] method and is
+  * dispatched to the core by name and arity; `ping` is the one op that
+  * is not a bus method. The typed errors cross the wire and are
+  * RE-THROWN as the same classes by [[SocketBus]], so the connector's
+  * retry/backoff logic (`pubsub_pipeline.py:204-211` semantics) is
+  * transport-agnostic. One connection serves many requests (loop until
+  * EOF); the client may equally open one per call.
   *
   * Binding is localhost-only: this is a test/benchmark daemon, not a
   * hardened network service.
@@ -58,142 +164,42 @@ final class BusService(port: Int = 0) {
 
   private def serve(sock: Socket): Unit = {
     sock.setTcpNoDelay(true)
-    val in = new DataInputStream(new java.io.BufferedInputStream(sock.getInputStream))
-    val out = new DataOutputStream(new java.io.BufferedOutputStream(sock.getOutputStream))
+    val in = BusWire.input(sock)
+    val out = BusWire.output(sock)
     try {
       while (true) {
-        val op = in.readUTF()
-        try {
-          handle(op, in, out)
-        } catch {
-          case e: InMemoryBus.TransientPullError => err(out, 1, e.getMessage)
-          case e: InMemoryBus.AckRpcError => err(out, 2, e.getMessage)
-          case e: InMemoryBus.PublishError => err(out, 3, e.getMessage)
-          case e: Throwable => err(out, 4, String.valueOf(e.getMessage))
-        }
-        out.flush()
+        val (op, args) = BusWire.readRequest(in)
+        BusWire.writeResponse(out,
+          try Right(dispatch(op, args)) catch { case e: Throwable => Left(e) })
       }
     } catch {
       case _: EOFException => // client done
-      case _: java.net.SocketException => // client gone
+      case _: SocketException => // client gone
     } finally {
       try sock.close() catch { case _: Throwable => () }
     }
   }
 
-  private def err(out: DataOutputStream, code: Int, msg: String): Unit = {
-    out.writeInt(code)
-    out.writeUTF(if (msg == null) "" else msg)
-  }
-
-  private def readBytes(in: DataInputStream): Array[Byte] = {
-    val n = in.readInt()
-    val b = new Array[Byte](n)
-    in.readFully(b)
-    b
-  }
-
-  private def writeBytes(out: DataOutputStream, b: Array[Byte]): Unit = {
-    out.writeInt(b.length)
-    out.write(b)
-  }
-
-  private def readAttrs(in: DataInputStream): Map[String, String] = {
-    val n = in.readInt()
-    (1 to n).map(_ => in.readUTF() -> in.readUTF()).toMap
-  }
-
-  private def handle(op: String, in: DataInputStream, out: DataOutputStream): Unit =
-    op match {
-      case "ping" =>
-        out.writeInt(0)
-      case "createTopic" =>
-        core.createTopic(in.readUTF()); out.writeInt(0)
-      case "createSub" =>
-        val t = in.readUTF(); val n = in.readUTF()
-        core.createSubscription(t, n); out.writeInt(0)
-      case "publish" =>
-        val t = in.readUTF()
-        val attrs = readAttrs(in)
-        val data = readBytes(in)
-        val id = core.publish(t, data, attrs)
-        out.writeInt(0); out.writeUTF(id)
-      case "publishBatch" =>
-        val t = in.readUTF()
-        val n = in.readInt()
-        // read the whole frame FIRST: a mid-batch PublishError must not
-        // desync the stream (request fully consumed before any throw)
-        val payloads = (1 to n).map(_ => readBytes(in))
-        val appended = core.publishBatch(t, payloads)
-        out.writeInt(0); out.writeInt(appended)
-      case "publishIdemBatch" =>
-        val t = in.readUTF()
-        val n = in.readInt()
-        val keyed = (1 to n).map(_ => (in.readUTF(), readBytes(in)))
-        val appended = core.publishIdempotentBatch(t, keyed)
-        out.writeInt(0); out.writeInt(appended)
-      case "publishIdem" =>
-        val t = in.readUTF(); val k = in.readUTF(); val data = readBytes(in)
-        val appended = core.publishIdempotent(t, k, data)
-        out.writeInt(0); out.writeBoolean(appended)
-      case "endOffset" =>
-        val v = core.endOffset(in.readUTF())
-        out.writeInt(0); out.writeLong(v)
-      case "committed" =>
-        val v = core.committedOffset(in.readUTF())
-        out.writeInt(0); out.writeLong(v)
-      case "read" =>
-        val s = in.readUTF(); val from = in.readLong(); val until = in.readLong()
-        val msgs = core.read(s, from, until)
-        out.writeInt(0)
-        out.writeInt(msgs.size)
-        msgs.foreach { m =>
-          out.writeUTF(m.messageId)
-          out.writeLong(m.publishTimeMicros)
-          out.writeInt(m.attributes.size)
-          m.attributes.foreach { case (k, v) => out.writeUTF(k); out.writeUTF(v) }
-          writeBytes(out, m.data)
-        }
-      case "commit" =>
-        val s = in.readUTF(); val upTo = in.readLong()
-        core.commit(s, upTo); out.writeInt(0)
-      case "failNextPulls" =>
-        core.failNextPulls(in.readUTF(), in.readInt()); out.writeInt(0)
-      case "failNextCommits" =>
-        core.failNextCommits(in.readUTF(), in.readInt()); out.writeInt(0)
-      case "capNextPulls" =>
-        val s = in.readUTF(); val cap = in.readLong(); val times = in.readInt()
-        core.capNextPulls(s, cap, times); out.writeInt(0)
-      case "failNextPublishes" =>
-        core.failNextPublishes(in.readUTF(), in.readInt()); out.writeInt(0)
-      case "failPublishesAfter" =>
-        val t = in.readUTF(); val after = in.readInt(); val n = in.readInt()
-        core.failPublishesAfter(t, after, n); out.writeInt(0)
-      case "rewindCommitted" =>
-        val s = in.readUTF(); val to = in.readLong()
-        core.rewindCommitted(s, to); out.writeInt(0)
-      case "payloads" =>
-        val ps = core.payloads(in.readUTF())
-        out.writeInt(0)
-        out.writeInt(ps.size)
-        ps.foreach(writeBytes(out, _))
-      case "reset" =>
-        core.reset(); out.writeInt(0)
-      case "nowMicros" =>
-        out.writeInt(0); out.writeLong(core.nowMicros())
-      case "advanceClock" =>
-        core.advanceClock(in.readLong()); out.writeInt(0)
-      case "acquireLease" =>
-        val s = in.readUTF(); val h = in.readUTF(); val d = in.readLong()
-        val ok = core.acquireLease(s, h, d)
-        out.writeInt(0); out.writeBoolean(ok)
-      case "modifyAckDeadline" =>
-        val s = in.readUTF(); val h = in.readUTF(); val d = in.readLong()
-        val ok = core.modifyAckDeadline(s, h, d)
-        out.writeInt(0); out.writeBoolean(ok)
-      case other =>
-        err(out, 4, s"unknown op: $other")
+  private def dispatch(op: String, args: Seq[Any]): Any =
+    if (op == "ping") ()
+    else {
+      val m = BusService.ops.getOrElse((op, args.size),
+        throw new IllegalArgumentException(s"unknown op: $op"))
+      try {
+        val r = m.invoke(core, args.asInstanceOf[Seq[AnyRef]]: _*)
+        if (m.getReturnType == Void.TYPE) () else r
+      } catch { case e: InvocationTargetException => throw e.getCause }
     }
+}
+
+private object BusService {
+  /** The dispatch table: the [[Bus]] methods, and nothing else, by name
+    * and arity (the only overload, `publish`, differs in arity). */
+  val ops: Map[(String, Int), Method] =
+    classOf[Bus].getMethods.iterator
+      .filter(m => !Modifier.isStatic(m.getModifiers) && !m.getName.contains('$'))
+      .map(m => (m.getName, m.getParameterCount) -> m)
+      .toMap
 }
 
 /** Stand-alone daemon entrypoint:
@@ -223,190 +229,55 @@ object BusServiceMain {
   * as against [[InMemoryBus]]. */
 final class SocketBus(host: String, port: Int) extends Bus {
 
-  private def call[A](f: (DataInputStream, DataOutputStream) => A): A = {
+  private def call[A](op: String, args: Any*): A = {
     val sock = new Socket(host, port)
-    sock.setTcpNoDelay(true)
     try {
-      val in = new DataInputStream(new java.io.BufferedInputStream(sock.getInputStream))
-      val out = new DataOutputStream(new java.io.BufferedOutputStream(sock.getOutputStream))
-      f(in, out)
+      sock.setTcpNoDelay(true)
+      BusWire.writeRequest(BusWire.output(sock), op, args)
+      BusWire.readResponse(BusWire.input(sock)).asInstanceOf[A]
     } finally {
       try sock.close() catch { case _: Throwable => () }
     }
   }
 
-  private def expectOk(in: DataInputStream): Unit = {
-    val status = in.readInt()
-    if (status != 0) {
-      val msg = in.readUTF()
-      status match {
-        case 1 => throw new InMemoryBus.TransientPullError(msg)
-        case 2 => throw new InMemoryBus.AckRpcError(msg)
-        case 3 => throw new InMemoryBus.PublishError(msg)
-        case _ => throw new IllegalStateException(s"bus service error: $msg")
-      }
-    }
-  }
-
-  private def writeBytes(out: DataOutputStream, b: Array[Byte]): Unit = {
-    out.writeInt(b.length)
-    out.write(b)
-  }
-
-  private def readBytes(in: DataInputStream): Array[Byte] = {
-    val n = in.readInt()
-    val b = new Array[Byte](n)
-    in.readFully(b)
-    b
-  }
-
-  override def createTopic(topic: String): Unit = call { (in, out) =>
-    out.writeUTF("createTopic"); out.writeUTF(topic); out.flush(); expectOk(in)
-  }
-
-  override def createSubscription(topic: String, name: String): Unit = call { (in, out) =>
-    out.writeUTF("createSub"); out.writeUTF(topic); out.writeUTF(name)
-    out.flush(); expectOk(in)
-  }
-
+  override def createTopic(topic: String): Unit = call("createTopic", topic)
+  override def createSubscription(topic: String, name: String): Unit =
+    call("createSubscription", topic, name)
   override def publish(topic: String, data: Array[Byte],
                        attributes: Map[String, String] = Map.empty): String =
-    call { (in, out) =>
-      out.writeUTF("publish"); out.writeUTF(topic)
-      out.writeInt(attributes.size)
-      attributes.foreach { case (k, v) => out.writeUTF(k); out.writeUTF(v) }
-      writeBytes(out, data)
-      out.flush(); expectOk(in)
-      in.readUTF()
-    }
-
+    call("publish", topic, data, attributes)
   override def publishIdempotent(topic: String, key: String, data: Array[Byte]): Boolean =
-    call { (in, out) =>
-      out.writeUTF("publishIdem"); out.writeUTF(topic); out.writeUTF(key)
-      writeBytes(out, data)
-      out.flush(); expectOk(in)
-      in.readBoolean()
-    }
-
+    call("publishIdempotent", topic, key, data)
   override def publishBatch(topic: String, data: Seq[Array[Byte]]): Int =
-    call { (in, out) =>
-      out.writeUTF("publishBatch"); out.writeUTF(topic)
-      out.writeInt(data.size)
-      data.foreach(writeBytes(out, _))
-      out.flush(); expectOk(in)
-      in.readInt()
-    }
-
+    call("publishBatch", topic, data)
   override def publishIdempotentBatch(topic: String,
                                       keyed: Seq[(String, Array[Byte])]): Int =
-    call { (in, out) =>
-      out.writeUTF("publishIdemBatch"); out.writeUTF(topic)
-      out.writeInt(keyed.size)
-      keyed.foreach { case (k, d) => out.writeUTF(k); writeBytes(out, d) }
-      out.flush(); expectOk(in)
-      in.readInt()
-    }
-
-  override def endOffset(name: String): Long = call { (in, out) =>
-    out.writeUTF("endOffset"); out.writeUTF(name); out.flush(); expectOk(in)
-    in.readLong()
-  }
-
-  override def committedOffset(name: String): Long = call { (in, out) =>
-    out.writeUTF("committed"); out.writeUTF(name); out.flush(); expectOk(in)
-    in.readLong()
-  }
-
-  override def read(name: String, from: Long, until: Long): Seq[InMemoryBus.BusMessage] =
-    call { (in, out) =>
-      out.writeUTF("read"); out.writeUTF(name)
-      out.writeLong(from); out.writeLong(until)
-      out.flush(); expectOk(in)
-      val n = in.readInt()
-      (1 to n).map { _ =>
-        val id = in.readUTF()
-        val ts = in.readLong()
-        val na = in.readInt()
-        val attrs = (1 to na).map(_ => in.readUTF() -> in.readUTF()).toMap
-        val data = readBytes(in)
-        InMemoryBus.BusMessage(data, id, ts, attrs)
-      }
-    }
-
-  override def commit(name: String, upTo: Long): Unit = call { (in, out) =>
-    out.writeUTF("commit"); out.writeUTF(name); out.writeLong(upTo)
-    out.flush(); expectOk(in)
-  }
-
-  override def payloads(name: String): Seq[Array[Byte]] = call { (in, out) =>
-    out.writeUTF("payloads"); out.writeUTF(name); out.flush(); expectOk(in)
-    val n = in.readInt()
-    (1 to n).map(_ => readBytes(in))
-  }
-
-  override def failNextPulls(name: String, n: Int): Unit = call { (in, out) =>
-    out.writeUTF("failNextPulls"); out.writeUTF(name); out.writeInt(n)
-    out.flush(); expectOk(in)
-  }
-
-  override def failNextCommits(name: String, n: Int): Unit = call { (in, out) =>
-    out.writeUTF("failNextCommits"); out.writeUTF(name); out.writeInt(n)
-    out.flush(); expectOk(in)
-  }
-
-  override def capNextPulls(name: String, maxPerPull: Long, times: Int): Unit =
-    call { (in, out) =>
-      out.writeUTF("capNextPulls"); out.writeUTF(name)
-      out.writeLong(maxPerPull); out.writeInt(times)
-      out.flush(); expectOk(in)
-    }
-
-  override def failNextPublishes(topic: String, n: Int): Unit = call { (in, out) =>
-    out.writeUTF("failNextPublishes"); out.writeUTF(topic); out.writeInt(n)
-    out.flush(); expectOk(in)
-  }
-
-  override def failPublishesAfter(topic: String, after: Int, n: Int): Unit =
-    call { (in, out) =>
-      out.writeUTF("failPublishesAfter"); out.writeUTF(topic)
-      out.writeInt(after); out.writeInt(n)
-      out.flush(); expectOk(in)
-    }
-
-  override def rewindCommitted(name: String, to: Long): Unit = call { (in, out) =>
-    out.writeUTF("rewindCommitted"); out.writeUTF(name); out.writeLong(to)
-    out.flush(); expectOk(in)
-  }
-
-  override def reset(): Unit = call { (in, out) =>
-    out.writeUTF("reset"); out.flush(); expectOk(in)
-  }
-
-  override def nowMicros(): Long = call { (in, out) =>
-    out.writeUTF("nowMicros"); out.flush(); expectOk(in); in.readLong()
-  }
-
-  override def advanceClock(byMicros: Long): Unit = call { (in, out) =>
-    out.writeUTF("advanceClock"); out.writeLong(byMicros)
-    out.flush(); expectOk(in)
-  }
-
-  override def acquireLease(name: String, holder: String,
-                            deadlineMicros: Long): Boolean = call { (in, out) =>
-    out.writeUTF("acquireLease"); out.writeUTF(name); out.writeUTF(holder)
-    out.writeLong(deadlineMicros)
-    out.flush(); expectOk(in); in.readBoolean()
-  }
-
+    call("publishIdempotentBatch", topic, keyed)
+  override def endOffset(name: String): Long = call("endOffset", name)
+  override def committedOffset(name: String): Long = call("committedOffset", name)
+  override def read(name: String, from: Long, until: Long): Seq[BusMessage] =
+    call("read", name, from, until)
+  override def commit(name: String, upTo: Long): Unit = call("commit", name, upTo)
+  override def payloads(name: String): Seq[Array[Byte]] = call("payloads", name)
+  override def nowMicros(): Long = call("nowMicros")
+  override def advanceClock(byMicros: Long): Unit = call("advanceClock", byMicros)
+  override def acquireLease(name: String, holder: String, deadlineMicros: Long): Boolean =
+    call("acquireLease", name, holder, deadlineMicros)
   override def modifyAckDeadline(name: String, holder: String,
-                                 newDeadlineMicros: Long): Boolean = call { (in, out) =>
-    out.writeUTF("modifyAckDeadline"); out.writeUTF(name); out.writeUTF(holder)
-    out.writeLong(newDeadlineMicros)
-    out.flush(); expectOk(in); in.readBoolean()
-  }
+                                 newDeadlineMicros: Long): Boolean =
+    call("modifyAckDeadline", name, holder, newDeadlineMicros)
+  override def failNextPulls(name: String, n: Int): Unit = call("failNextPulls", name, n)
+  override def failNextCommits(name: String, n: Int): Unit = call("failNextCommits", name, n)
+  override def capNextPulls(name: String, maxPerPull: Long, times: Int): Unit =
+    call("capNextPulls", name, maxPerPull, times)
+  override def failNextPublishes(topic: String, n: Int): Unit =
+    call("failNextPublishes", topic, n)
+  override def failPublishesAfter(topic: String, after: Int, n: Int): Unit =
+    call("failPublishesAfter", topic, after, n)
+  override def rewindCommitted(name: String, to: Long): Unit =
+    call("rewindCommitted", name, to)
+  override def reset(): Unit = call("reset")
 
   /** Liveness probe (launcher handshake helper). */
-  def ping(): Unit = call { (in, out) =>
-    out.writeUTF("ping"); out.flush(); expectOk(in)
-  }
+  def ping(): Unit = call("ping")
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
-/** In-memory Pub/Sub-shaped message bus (SURVEY §7 M5).
+/** In-memory Pub/Sub-shaped message bus (SURVEY §7 M5): the JVM-singleton
+  * [[BusCore]], and the home of the types every transport shares.
   *
   * Models the subset of Pub/Sub the reference touches: topics,
   * subscriptions, opaque byte payloads with ack handles, at-least-once
@@ -8,8 +9,8 @@ package graft.sources
   * Zero-egress: this is the test double for the real service; the DSv2
   * connector (`BusProvider`) is the production-shaped integration point.
   *
-  * Semantics (implemented once in [[BusCore]], shared with the
-  * cross-process [[BusService]] daemon):
+  * Semantics (implemented once in [[BusCore]], which this object is and
+  * the cross-process [[BusService]] daemon serves):
   *  - `publish(topic, ...)` appends to every subscription of the topic
   *    (fan-out, like Pub/Sub).
   *  - A subscription is an ordered log + a committed (acked) prefix.
@@ -26,13 +27,17 @@ package graft.sources
   *    by (topic, key) — the standard batchId-keyed idempotent-sink
   *    pattern that upgrades at-least-once to effective exactly-once.
   *
+  * Being an `object`, its [[Bus]] methods are also compiled as JVM
+  * statics of class `graft.sources.InMemoryBus`, which is how py4j
+  * callers (`python/smoke_pubsub.py`) reach it.
+  *
   * JVM-singleton state: fine for local[*] (driver and executors share the
   * JVM). For real multi-process execution — separate executor JVMs, or a
   * bus that must survive the pipeline's death — use a [[BusService]]
   * daemon and the `bus = socket://host:port` option; the connector code
   * is identical either way (it only sees the [[Bus]] trait).
   */
-object InMemoryBus extends Bus {
+object InMemoryBus extends BusCore {
 
   final case class BusMessage(
       data: Array[Byte],
@@ -50,56 +55,4 @@ object InMemoryBus extends Bus {
   /** Non-transient publish failure (models a failed publish future —
     * `test_pubsub_pipeline.py:87-104`'s contract: no ack on publish fail). */
   final class PublishError(msg: String) extends RuntimeException(msg)
-
-  private val core = new BusCore
-
-  override def createTopic(topic: String): Unit = core.createTopic(topic)
-  override def createSubscription(topic: String, name: String): Unit =
-    core.createSubscription(topic, name)
-  override def publish(topic: String, data: Array[Byte],
-                       attributes: Map[String, String] = Map.empty): String =
-    core.publish(topic, data, attributes)
-  override def publishIdempotent(topic: String, key: String, data: Array[Byte]): Boolean =
-    core.publishIdempotent(topic, key, data)
-  /** Current end offset (exclusive) of a subscription's log. */
-  override def endOffset(name: String): Long = core.endOffset(name)
-  /** Committed (acked) prefix offset. */
-  override def committedOffset(name: String): Long = core.committedOffset(name)
-  /** Read log slice [from, until). */
-  override def read(name: String, from: Long, until: Long): Seq[BusMessage] =
-    core.read(name, from, until)
-  /** Ack every message below `upTo` (idempotent, monotone). */
-  override def commit(name: String, upTo: Long): Unit = core.commit(name, upTo)
-  /** All payloads currently in a subscription's log (test support). */
-  override def payloads(name: String): Seq[Array[Byte]] = core.payloads(name)
-  /** Inject `times` partial pulls (service under-reports the backlog). */
-  override def capNextPulls(name: String, maxPerPull: Long, times: Int): Unit =
-    core.capNextPulls(name, maxPerPull, times)
-  /** Inject `n` ack-RPC failures (publish succeeded, ack never lands). */
-  override def failNextCommits(name: String, n: Int): Unit =
-    core.failNextCommits(name, n)
-  /** Test support: rewind the acked prefix (models a lost ack). */
-  override def rewindCommitted(name: String, to: Long): Unit =
-    core.rewindCommitted(name, to)
-  /** Inject `n` transient pull failures (DeadlineExceeded retry path). */
-  override def failNextPulls(name: String, n: Int): Unit =
-    core.failNextPulls(name, n)
-  /** Inject `n` publish failures on a topic. */
-  override def failNextPublishes(topic: String, n: Int): Unit =
-    core.failNextPublishes(topic, n)
-  /** Inject a MID-BATCH publish failure after `after` successes. */
-  override def failPublishesAfter(topic: String, after: Int, n: Int): Unit =
-    core.failPublishesAfter(topic, after, n)
-  /** Test support: drop all topics/subscriptions. */
-  override def reset(): Unit = core.reset()
-  /** Logical-clock now (see [[Bus.nowMicros]]). */
-  override def nowMicros(): Long = core.nowMicros()
-  /** Test support: advance the logical clock (lease-expiry driver). */
-  override def advanceClock(byMicros: Long): Unit = core.advanceClock(byMicros)
-  /** Acquire/renew the subscription pull lease (see [[Bus.acquireLease]]). */
-  override def acquireLease(name: String, holder: String, deadlineMicros: Long): Boolean =
-    core.acquireLease(name, holder, deadlineMicros)
-  /** The modify_ack_deadline analog (see [[Bus.modifyAckDeadline]]). */
-  override def modifyAckDeadline(name: String, holder: String, newDeadlineMicros: Long): Boolean =
-    core.modifyAckDeadline(name, holder, newDeadlineMicros)
 }
