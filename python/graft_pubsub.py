@@ -111,11 +111,11 @@ class PubSubPipeline:
     def start(self, available_now: bool = False):
         """Start the pipeline; returns the pyspark StreamingQuery.
         The JVM half serializes every processor-output column into one
-        JSON payload, publishes per partition, and acks the subscription
-        after each durable batch."""
+        JSON payload and publishes per partition; the bus source acks
+        each batch once it is in the checkpoint's commit log."""
         out = self.processor(self.stream())
         jquery = self.spark._jvm.graft.streaming.PyPipeline.start(
-            out._jdf, self.incoming_subscription, self.outgoing_topic,
+            out._jdf, self.outgoing_topic,
             self.bus, self.checkpoint_dir, available_now, self.idempotent)
         from pyspark.sql.streaming import StreamingQuery
         return StreamingQuery(jquery)

@@ -27,8 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    retry on `TransientPullError` (the reference recurses and can blow
   *    the stack, SURVEY §2-D — deliberately not replicated);
   *  - ack-on-publish-success (`pubsub_pipeline.py:82-84,31-52`) →
-  *    `commit(offset)` is called by the engine only after the batch's sink
-  *    epoch committed, then acks the prefix in the bus;
+  *    `latestOffset(start, limit)` acks `start`, the end of the last
+  *    batch in the engine's commit log, before it pulls the next batch;
+  *    `commit(offset)` is a no-op (see [[BusMicroBatchStream]]);
   *  - bounded runs (`max_processed_messages`, `pubsub_pipeline.py:161-163`)
   *    → `Trigger.AvailableNow` via `SupportsTriggerAvailableNow` — "stop
   *    once ≥ N" fixes the reference's `==` overshoot hang (SURVEY §2-D).
@@ -80,7 +81,6 @@ private class BusTable(props: Map[String, String]) extends Table with SupportsRe
             subscription = options.get("subscription"),
             busSpec = options.getOrDefault("bus", "memory"),
             bulkLimit = options.getInt("bulkLimit", 20),
-            maxPullRetries = options.getInt("maxPullRetries", 3),
             readPartitions = options.getInt("readPartitions", 4),
             retryBackoffMs = options.getLong("retryBackoffMs", 100L),
             respectDeadline = options.getBoolean("respectDeadline", false),
@@ -97,9 +97,34 @@ case class BusOffset(offset: Long) extends Offset {
   override def json(): String = offset.toString
 }
 
+/** The bus subscription as a micro-batch stream.
+  *
+  * Acking: `latestOffset(start, limit)` acks `start` before anything
+  * else, and nothing else acks. The engine asks for a new batch's
+  * offsets only once the batch ending at `start` is in its commit log,
+  * i.e. after that batch's sink returned. It asks once more after an
+  * `AvailableNow` run's last batch (the run stops only when a new batch
+  * finds no data), so a bounded run acks everything before it ends. The
+  * ack runs on the stream thread, before the next batch takes the lease
+  * and pulls, so it never releases the lease of a batch in flight. A
+  * replayed batch (restart after a crash before its commit) is re-run
+  * without a `latestOffset` call, so it is acked only once committed.
+  *
+  * The bus is called only when `start` is above the highest offset this
+  * instance has acked, which starts at the subscription's committed
+  * offset: a fresh query's first trigger makes no ack call, and a
+  * restored checkpoint's committed but unacked prefix is acked at its
+  * first trigger. A lost ack (`AckRpcError`) is logged and does not fail
+  * the query; acks are cumulative, so the next `latestOffset` heals it.
+  *
+  * The one narrower case: a live query stopped between a batch's commit
+  * and its next trigger leaves that batch unacked until the same
+  * checkpoint starts again, and that start acks it at its first trigger.
+  * Nothing is lost, and that checkpoint sees no duplicate (another
+  * consumer of the subscription would be redelivered the batch).
+  */
 private class BusMicroBatchStream(subscription: String, busSpec: String,
-                                  bulkLimit: Int,
-                                  maxPullRetries: Int, readPartitions: Int,
+                                  bulkLimit: Int, readPartitions: Int,
                                   retryBackoffMs: Long, respectDeadline: Boolean,
                                   maxBytesPerPull: Long, leaseMicros: Long,
                                   leaseHeartbeatMs: Long, startAtCommitted: Boolean)
@@ -115,6 +140,9 @@ private class BusMicroBatchStream(subscription: String, busSpec: String,
   private val bus: Bus = BusRegistry.resolve(busSpec)
 
   @volatile private var availableNowEnd: Option[Long] = None
+
+  // the highest offset known acked; read and written on the stream thread
+  private var acked: Long = bus.committedOffset(subscription)
 
   // --- pull-lease management (modify_ack_deadline analog, round 13) ---
   // Option `leaseMicros` > 0 turns on competing-consumer protection:
@@ -166,7 +194,7 @@ private class BusMicroBatchStream(subscription: String, busSpec: String,
         case e: InMemoryBus.TransientPullError =>
           if (respectDeadline) throw e
           attempt += 1
-          if (attempt > maxPullRetries) throw e
+          if (attempt > BusMicroBatchStream.MaxPullRetries) throw e
           if (retryBackoffMs > 0) Thread.sleep(retryBackoffMs)
       }
     }
@@ -186,6 +214,7 @@ private class BusMicroBatchStream(subscription: String, busSpec: String,
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[BusOffset].offset
+    ack(from)
     if (leaseMicros > 0) {
       // competing-consumer gate: no lease, no pull — report no progress
       // and let the holder (or expiry) decide when this backlog is ours
@@ -266,18 +295,27 @@ private class BusMicroBatchStream(subscription: String, busSpec: String,
 
   override def createReaderFactory(): PartitionReaderFactory = new BusReaderFactory
 
-  /** Engine calls this after the sink epoch is durable → ack the prefix.
-    * This IS the Acknowledger (`pubsub_pipeline.py:31-52`) with a WAL.
-    * A lost ack RPC must NOT fail the query: the source is at-least-once
-    * by contract, acks are monotone-cumulative, and the next successful
-    * commit covers the lost prefix (PipelineSpec "lost ack RPC" contract)
-    * — unlike the reference, whose bare-except swallow at the same spot
-    * leaves the message to redeliver as a duplicate. */
-  override def commit(end: Offset): Unit =
-    try bus.commit(subscription, end.asInstanceOf[BusOffset].offset)
-    catch { case e: InMemoryBus.AckRpcError =>
-      logWarning(s"[bus] ack lost on $subscription (will heal): ${e.getMessage}")
+  /** Ack the committed prefix `[0, upTo)`. This IS the Acknowledger
+    * (`pubsub_pipeline.py:31-52`) with a WAL under it. A lost ack RPC
+    * must NOT fail the query: the source is at-least-once by contract,
+    * acks are cumulative, and the next `latestOffset` retries the prefix
+    * (PipelineSpec "lost ack RPC" contract) — unlike the reference, whose
+    * bare-except swallow at the same spot leaves the message to redeliver
+    * as a duplicate. */
+  private def ack(upTo: Long): Unit =
+    if (upTo > acked) {
+      try {
+        bus.commit(subscription, upTo)
+        acked = upTo
+      } catch { case e: InMemoryBus.AckRpcError =>
+        logWarning(s"[bus] ack lost on $subscription (will heal): ${e.getMessage}")
+      }
     }
+
+  /** A no-op, as in Spark's Kafka source: the engine calls it lazily,
+    * after the NEXT batch's `latestOffset`, so an ack here would release
+    * the lease of the batch already in flight. `latestOffset` acks. */
+  override def commit(end: Offset): Unit = ()
 
   override def stop(): Unit = {
     val ex = heartbeat.getAndSet(null)
@@ -290,6 +328,12 @@ private class BusMicroBatchStream(subscription: String, busSpec: String,
     }
     ()
   }
+}
+
+private object BusMicroBatchStream {
+  /** Transient-pull retries before a pull error fails the batch
+    * (`respectDeadline` is the fail-at-once setting). */
+  val MaxPullRetries = 3
 }
 
 /** Carries the bus SPEC string, never a connection: the reader resolves

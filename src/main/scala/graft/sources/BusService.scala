@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException}
 import java.lang.reflect.{InvocationTargetException, Method, Modifier}
-import java.net.{InetAddress, ServerSocket, Socket, SocketException}
+import java.net.{InetAddress, InetSocketAddress, ServerSocket, Socket, SocketException}
 
 import InMemoryBus.{AckRpcError, BusMessage, PublishError, TransientPullError}
 
@@ -230,8 +230,12 @@ object BusServiceMain {
 final class SocketBus(host: String, port: Int) extends Bus {
 
   private def call[A](op: String, args: Any*): A = {
-    val sock = new Socket(host, port)
+    val sock = new Socket()
     try {
+      // a daemon that stops answering fails the call instead of blocking
+      // the Spark task or driver thread forever
+      sock.connect(new InetSocketAddress(host, port), SocketBus.TimeoutMs)
+      sock.setSoTimeout(SocketBus.TimeoutMs)
       sock.setTcpNoDelay(true)
       BusWire.writeRequest(BusWire.output(sock), op, args)
       BusWire.readResponse(BusWire.input(sock)).asInstanceOf[A]
@@ -280,4 +284,10 @@ final class SocketBus(host: String, port: Int) extends Bus {
 
   /** Liveness probe (launcher handshake helper). */
   def ping(): Unit = call("ping")
+}
+
+object SocketBus {
+  /** Connect and read timeout of every call: a `SocketTimeoutException`
+    * after it reaches the caller as is. */
+  val TimeoutMs = 30000
 }

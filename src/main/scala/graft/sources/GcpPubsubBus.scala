@@ -36,8 +36,8 @@ import graft.sources.InMemoryBus.{BusMessage, TransientPullError}
   *    PubsubMessage(data))` then BLOCK on the returned
   *    `ApiFuture<String>` for the message id — the adapter publishes
   *    synchronously because the engine's ack-on-publish-success commit
-  *    (AckOnCommitListener) already sequences ack after a SUCCESSFUL
-  *    publish at the epoch level; per-message callback plumbing (the
+  *    (the bus source acks a batch only once it is in the commit log)
+  *    already sequences ack after a SUCCESSFUL publish at the epoch level; per-message callback plumbing (the
   *    reference's `Acknowledger`) is unnecessary under offset commits.
   *
   * Paths follow the client's `subscription_path`/`topic_path` helpers

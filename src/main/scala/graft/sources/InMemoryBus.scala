@@ -15,9 +15,10 @@ package graft.sources
   *    (fan-out, like Pub/Sub).
   *  - A subscription is an ordered log + a committed (acked) prefix.
   *    `commit(sub, n)` acks everything below offset n — the streaming
-  *    source calls it only after the sink epoch is durable, which is the
-  *    reference's ack-on-publish-success (`pubsub_pipeline.py:82-84`)
-  *    strengthened by the checkpoint WAL (SURVEY §3.4).
+  *    source calls it from `latestOffset`, for the end of the last batch
+  *    in the engine's commit log, which is the reference's
+  *    ack-on-publish-success (`pubsub_pipeline.py:82-84`) strengthened
+  *    by the checkpoint WAL (SURVEY §3.4).
   *  - Messages above the committed prefix are redelivered on restart
   *    (at-least-once; duplicates possible, same as the reference §2-D).
   *  - `failNextPulls(sub, n)` injects transient pull failures to exercise

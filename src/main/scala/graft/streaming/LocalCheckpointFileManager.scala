@@ -30,8 +30,8 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * Reads, listings and existence checks go to Hadoop's local filesystem,
   * which forks for none of them. A path on any other scheme goes to the
   * manager Spark would pick with `spark.sql.streaming.checkpointFileManagerClass`
-  * unset. [[AckOnCommitListener.run]] installs this manager for the
-  * acked queries it starts. */
+  * unset. [[Pipeline.startQuery]] installs this manager for the
+  * queries it starts. */
 final class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
     extends CheckpointFileManager {
   import LocalCheckpointFileManager._

@@ -164,8 +164,7 @@ final class MinhashMaintenance(
     val src = Pipeline.busStream(spark, subscription, busSpec, serde, "bulkLimit" -> bulkLimit)
       .select(col("payload.doc_id").as("doc_id"),
         col("payload.text").as("text"))
-    val q = AckOnCommitListener.run(src, subscription, busSpec, checkpointDir,
-      availableNow)(applyBatch)
+    val q = Pipeline.startQuery(src, checkpointDir, availableNow)(applyBatch)
     state.persistIdentity(q.id.toString)
     q
   }

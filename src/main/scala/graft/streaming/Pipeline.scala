@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.DataType
 
 import graft.sources.{BusProvider, BusRegistry}
@@ -63,12 +63,14 @@ case object BytesSerde extends Serde {
   * `graft.operators` composes in unchanged, which is how the batch
   * library and the streaming runner stay one engine.
   *
-  * Delivery contract: at-least-once. The source's `commit(offset)` (ack)
-  * runs only after `foreachBatch` returns, i.e. after every row of the
-  * batch was published (`pubsub_pipeline.py:82-84` semantics, backed by
-  * the checkpoint WAL instead of an in-flight future callback —
-  * SURVEY §3.4). A crash between publish and checkpoint replays the
-  * batch: duplicates possible, never loss (§2-D documented window).
+  * Delivery contract: at-least-once. The bus source acks a batch when
+  * the engine asks it for the next batch's offsets, which it does only
+  * once the batch is in the commit log, i.e. after `foreachBatch`
+  * returned and every row of the batch was published
+  * (`pubsub_pipeline.py:82-84` semantics, backed by the checkpoint WAL
+  * instead of an in-flight future callback — SURVEY §3.4). A crash
+  * between publish and checkpoint replays the batch: duplicates
+  * possible, never loss (§2-D documented window).
   *
   * A `file:` checkpoint is written through [[LocalCheckpointFileManager]]
   * (no forked processes, no `.crc` sidecars) unless the session sets
@@ -147,17 +149,11 @@ final class Pipeline(
 
   /** Start the pipeline. `availableNow = true` gives a bounded drain-and-
     * stop run (the fixed version of `max_processed_messages`, §2-D).
-    *
-    * Acking: the engine only invokes `MicroBatchStream.commit()` lazily
-    * (when planning a later batch), so a bounded run would finish with the
-    * last batch published-but-unacked. The shared sink
-    * ([[Pipeline.startPublish]]) registers a listener that acks on every
-    * `QueryProgress` event — emitted after the batch's offset/commit logs
-    * are durable and `foreachBatch` (the publish) returned, which is
-    * precisely the reference's "ack only after successful publish"
-    * (`pubsub_pipeline.py:82-84`) ordering, with a WAL under it. */
+    * Acks follow the delivery contract above; a bounded run asks the
+    * source for offsets once more after its last batch, so it ends with
+    * every batch acked. */
   def start(availableNow: Boolean = false): StreamingQuery =
-    Pipeline.startPublish(transform(stream()), serde.serialize, subscription,
+    Pipeline.startPublish(transform(stream()), serde.serialize,
       outTopic, busSpec, checkpointDir, availableNow, idempotent)
 
   /** Graceful shutdown between micro-batches — the engine's
@@ -186,6 +182,36 @@ object Pipeline {
       case (reader, (k, v)) => reader.option(k, v.toString)
     }.load().withColumn("payload", serde.deserialize(col("value")))
 
+  /** Start `src` as a micro-batch query whose batches go to `onBatch` —
+    * the one query start every runner shares. `availableNow = true`
+    * drains the backlog and stops; otherwise the query triggers back to
+    * back. The bus source acks each committed batch itself.
+    *
+    * Unless the session already names a checkpoint manager, the query
+    * writes its checkpoint through [[LocalCheckpointFileManager]]. The
+    * conf is set only around `start()`: the query takes its checkpoint
+    * manager from the session clone `start()` makes, so the value reaches
+    * this query alone. This object's lock keeps two concurrent starts
+    * from seeing each other's value. */
+  private[streaming] def startQuery(src: DataFrame, checkpointDir: String,
+      availableNow: Boolean)(onBatch: (DataFrame, Long) => Unit): StreamingQuery =
+    withLocalCheckpoints(src.sparkSession) {
+      src.writeStream
+        .option("checkpointLocation", checkpointDir)
+        .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(0))
+        .foreachBatch(onBatch)
+        .start()
+    }
+
+  private def withLocalCheckpoints[T](spark: SparkSession)(start: => T): T = synchronized {
+    import LocalCheckpointFileManager.ConfKey
+    if (spark.conf.getOption(ConfKey).isDefined) start
+    else {
+      spark.conf.set(ConfKey, classOf[LocalCheckpointFileManager].getName)
+      try start finally spark.conf.unset(ConfKey)
+    }
+  }
+
   /** Stable pipeline identity for idempotence-key namespacing: derived
     * from the checkpoint location, which is exactly the unit that defines
     * "the same logical pipeline" across restarts. */
@@ -194,18 +220,18 @@ object Pipeline {
       checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .toString.take(8)
 
-  /** The publish+ack half shared by [[Pipeline]] and [[PyPipeline]]:
+  /** The publish half shared by [[Pipeline]] and [[PyPipeline]]:
     * serializes every column of the already-transformed streaming frame
-    * `out` into one `data` payload per row, publishes each micro-batch
-    * from the executors (no collect-to-driver), and acks `subscription`
-    * on each durable batch through [[AckOnCommitListener]]. */
+    * `out` into one `data` payload per row and publishes each micro-batch
+    * from the executors (no collect-to-driver). The sink only publishes:
+    * the bus source acks each batch once it is committed. */
   private[streaming] def startPublish(
-      out: DataFrame, serialize: Column => Column, subscription: String,
+      out: DataFrame, serialize: Column => Column,
       outTopic: String, busSpec: String, checkpointDir: String,
       availableNow: Boolean, idempotent: Boolean): StreamingQuery = {
     val pipe = pipelineId(checkpointDir)
     val data = out.select(serialize(struct(out.columns.map(col).toIndexedSeq: _*)).as("data"))
-    AckOnCommitListener.run(data, subscription, busSpec, checkpointDir, availableNow) {
+    startQuery(data, checkpointDir, availableNow) {
       (batch, batchId) =>
         // Executor-side publish: no collect-to-driver. On the in-memory
         // bus this is same-JVM; against a real service each partition

@@ -230,15 +230,10 @@ final class ProjectionMaintenance(
     val src = Pipeline.busStream(spark, subscription, busSpec, serde, "bulkLimit" -> bulkLimit)
       .select(col("payload.l_orderkey").as("l_orderkey"),
         col("payload.parts").as("parts"))
-    val q = AckOnCommitListener.run(src, subscription, busSpec, checkpointDir,
-      availableNow)(applyBatch)
+    val q = Pipeline.startQuery(src, checkpointDir, availableNow)(applyBatch)
     // q.id IS the checkpoint's persistent query id (Spark writes it to
     // checkpointDir/metadata at first start and reuses it after)
     state.persistIdentity(q.id.toString)
     q
   }
-}
-
-object ProjectionMaintenance {
-  private[streaming] val PointerFile = VersionedStateDir.PointerFile
 }

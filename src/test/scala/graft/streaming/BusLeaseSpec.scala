@@ -3,6 +3,8 @@ package graft.streaming
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -87,6 +89,18 @@ class BusLeaseSpec extends AnyFunSuite {
       assert(bus.acquireLease("ws", "B", bus.nowMicros() + 50000))
     } finally svc.stop()
   }
+}
+
+/** Lease probes made from inside a running batch: a rival asks for the
+  * lease with a deadline of "now", which is born expired, so a win never
+  * blocks the source. Static, so Spark tasks in this JVM reach it. */
+private object RivalProbe {
+  val wins = new java.util.concurrent.atomic.AtomicInteger
+  val losses = new java.util.concurrent.atomic.AtomicInteger
+
+  def probe(sub: String): Unit =
+    if (InMemoryBus.acquireLease(sub, "rival", InMemoryBus.nowMicros())) wins.incrementAndGet()
+    else losses.incrementAndGet()
 }
 
 /** Streaming-source integration: the heartbeat keeps a SLOW batch's lease
@@ -194,6 +208,66 @@ class BusLeaseStreamingSpec extends SparkSpec {
       "startAtCommitted re-emitted acked messages")
     assert(drainCount(sub, ckptC, startAtCommitted = false) == 10L,
       "default contract unexpectedly skipped the acked prefix")
+  }
+
+  test("the source acks before it takes the lease: a rival loses in every batch of a plain query") {
+    val id = java.util.UUID.randomUUID().toString.take(8)
+    val topic = s"ackl-t-$id"; val sub = s"ackl-s-$id"
+    InMemoryBus.createTopic(topic)
+    InMemoryBus.createSubscription(topic, sub)
+    val n = 30
+    (1 to n).foreach(i => InMemoryBus.publish(topic, s"m$i".getBytes(UTF_8)))
+    // (rows, rival won) per batch
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Boolean)]()
+    val q = spark.readStream.format(graft.sources.BusProvider.format)
+      .option("subscription", sub)
+      .option("bulkLimit", 10)
+      // far beyond the logical time the test's publishes add
+      .option("leaseMicros", 1000000000000L)
+      .load()
+      .writeStream
+      .option("checkpointLocation", Files.createTempDirectory("graft-ackl-ckpt").toString)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        val rows = b.count()
+        batches.add((rows, InMemoryBus.acquireLease(sub, "rival", InMemoryBus.nowMicros())))
+        ()
+      }
+      .start()
+    q.awaitTermination(60000)
+    assert(q.exception.isEmpty)
+    val seen = batches.asScala.toSeq
+    assert(seen.map(_._1) === Seq(10L, 10L, 10L))
+    assert(seen.forall(!_._2), s"the rival won the lease of a batch in flight: $seen")
+    assert(InMemoryBus.committedOffset(sub) === n)
+  }
+
+  test("Pipeline with leasing on: a rival probing from the transform never wins") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val id = java.util.UUID.randomUUID().toString.take(8)
+    val inTopic = s"ackp-in-$id"; val inSub = s"ackp-insub-$id"
+    val outTopic = s"ackp-out-$id"; val outSub = s"ackp-outsub-$id"
+    InMemoryBus.createTopic(inTopic); InMemoryBus.createSubscription(inTopic, inSub)
+    InMemoryBus.createTopic(outTopic); InMemoryBus.createSubscription(outTopic, outSub)
+    val n = 30
+    (1 to n).foreach(i => InMemoryBus.publish(inTopic, s"""{"data":"m$i"}""".getBytes(UTF_8)))
+    RivalProbe.wins.set(0); RivalProbe.losses.set(0)
+    val sub = inSub
+    val probed = udf { (d: String) => RivalProbe.probe(sub); d }.asNondeterministic()
+    val schema = new org.apache.spark.sql.types.StructType().add("data", "string")
+    val q = new Pipeline(
+      spark, inSub, outTopic, JsonSerde(schema),
+      df => df.select(probed(col("payload.data")).as("data")),
+      Files.createTempDirectory("graft-ackp-ckpt").toString,
+      bulkLimit = 10, leaseMicros = 1000000000000L)
+      .start(availableNow = true)
+    q.awaitTermination(60000)
+    assert(q.exception.isEmpty)
+    assert(q.recentProgress.count(_.numInputRows > 0) === 3)
+    assert(InMemoryBus.payloads(outSub).size === n)
+    assert(RivalProbe.losses.get === n)
+    assert(RivalProbe.wins.get === 0, "the rival won the lease of a batch in flight")
+    assert(InMemoryBus.committedOffset(inSub) === n)
   }
 
   test("Pipeline runner with leasing on: bounded run delivers, acks, and frees the lease") {

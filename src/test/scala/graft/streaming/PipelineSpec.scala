@@ -283,7 +283,7 @@ class PipelineSpec extends SparkSpec {
         .option("subscription", inSub).load()
         .withColumn("payload", JsonSerde(payloadSchema).deserialize(col("value")))
         .select(col("payload.data").as("data")),
-      inSub, outTopic, "memory", ckpt.toString,
+      outTopic, "memory", ckpt.toString,
       availableNow = true, idempotent = true)
     val q1 = start()
     q1.awaitTermination(60000)
@@ -766,6 +766,46 @@ class PipelineSpec extends SparkSpec {
     assert(InMemoryBus.payloads(outSub).map(new String(_, UTF_8)).sorted
       === (1 to 30).map(i => s"""{"data":"m$i","nested":{"nestedData":"x"}}""").sorted)
     assert(awaitCommitted(inSub, 30) === 30)
+  }
+
+  test("a plain AvailableNow bus query acks its last batch before it stops") {
+    val (inTopic, inSub, _, _) = fresh("ackend")
+    (1 to 25).foreach(i => InMemoryBus.publish(inTopic, s"m$i".getBytes(UTF_8)))
+    val rows = new java.util.concurrent.atomic.AtomicLong
+    val q = spark.readStream.format(graft.sources.BusProvider.format)
+      .option("subscription", inSub).option("bulkLimit", 10).load()
+      .writeStream
+      .option("checkpointLocation", Files.createTempDirectory("graft-ckpt").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (b: DataFrame, _: Long) => rows.addAndGet(b.count()); () }
+      .start()
+    q.awaitTermination(60000)
+    assert(q.exception.isEmpty)
+    assert(rows.get === 25)
+    // read at once, no polling: the ack ran on the stream thread
+    assert(InMemoryBus.committedOffset(inSub) === 25)
+  }
+
+  test("a stream-stream join over two bus subscriptions acks both") {
+    val (leftTopic, leftSub, _, _) = fresh("joinl")
+    val (rightTopic, rightSub, _, _) = fresh("joinr")
+    (1 to 6).foreach(i => InMemoryBus.publish(leftTopic, s"k$i".getBytes(UTF_8)))
+    (4 to 8).foreach(i => InMemoryBus.publish(rightTopic, s"k$i".getBytes(UTF_8)))
+    def keys(sub: String, name: String) = spark.readStream.format(graft.sources.BusProvider.format)
+      .option("subscription", sub).option("bulkLimit", 2).load()
+      .select(col("value").cast("string").as(name))
+    val joined = new java.util.concurrent.atomic.AtomicLong
+    val q = keys(leftSub, "l").join(keys(rightSub, "r"), col("l") === col("r"))
+      .writeStream
+      .option("checkpointLocation", Files.createTempDirectory("graft-ckpt").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (b: DataFrame, _: Long) => joined.addAndGet(b.count()); () }
+      .start()
+    q.awaitTermination(60000)
+    assert(q.exception.isEmpty)
+    assert(joined.get === 3) // k4, k5, k6
+    assert(InMemoryBus.committedOffset(leftSub) === 6)
+    assert(InMemoryBus.committedOffset(rightSub) === 5)
   }
 
   test("a failed start leaves no ack listener behind") {

@@ -27,6 +27,33 @@ class SocketBusSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = service.stop()
 
+  test("a daemon that accepts and never replies times the call out") {
+    val silent = new java.net.ServerSocket(0, 4, java.net.InetAddress.getLoopbackAddress)
+    val accepted = new java.util.concurrent.CopyOnWriteArrayList[java.net.Socket]()
+    val acceptor = new Thread(() =>
+      try while (true) accepted.add(silent.accept())
+      catch { case _: java.io.IOException => () })
+    acceptor.setDaemon(true)
+    acceptor.start()
+    try {
+      val client = new SocketBus("127.0.0.1", silent.getLocalPort)
+      val t0 = System.nanoTime()
+      val call = scala.concurrent.Future(client.endOffset("s"))(
+        scala.concurrent.ExecutionContext.global)
+      // bounded: a call that never times out fails this wait instead of
+      // hanging the suite
+      intercept[java.net.SocketTimeoutException] {
+        scala.concurrent.Await.result(call,
+          scala.concurrent.duration.Duration(2L * SocketBus.TimeoutMs, "ms"))
+      }
+      assert((System.nanoTime() - t0) / 1e6 >= SocketBus.TimeoutMs * 0.9)
+      assert(!accepted.isEmpty, "the call never reached the silent daemon")
+    } finally {
+      silent.close()
+      accepted.forEach(_.close())
+    }
+  }
+
   test("publish/read/commit/endOffset round-trip with attributes") {
     bus.createTopic("t1")
     bus.createSubscription("t1", "s1")

@@ -43,12 +43,16 @@ object StreamWindowsArtifact {
         s""""claim": ${jstr(claim)}}"""
   }
 
+  /** Write the artifact once every demo has recorded, to
+    * `SPARK_GRAFT_STREAMWINDOWS` if set, else to `docs/STREAMWINDOWS.json`
+    * under the working directory: the forked test JVM runs in the project
+    * base, so a run in a copy of the project writes that copy's file. */
   def flushIfComplete(): Unit = synchronized {
     if (required.subsetOf(entries.keySet)) {
       val body = entries.map { case (k, v) => s"  ${jstr(k)}: $v" }.mkString(",\n")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_STREAMWINDOWS",
-          "/root/repo/docs/STREAMWINDOWS.json")),
+          "docs/STREAMWINDOWS.json")),
         s"""{\n  "metric": "streaming_window_family",\n""" +
           s"""  "refreshed_by": "StreamingWindowSpec (full run)",\n""" +
           s"""  "demos": ${entries.size},\n$body\n}\n""")
