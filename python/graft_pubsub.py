@@ -21,8 +21,8 @@ google_cloud_project            part of the ``bus`` spec (a registered
                                 scheme, e.g. a GcpPubsubBus factory)
 incoming_subscription           incoming_subscription
 outgoing_topic                  outgoing_topic
-message_deserializer (json)     message_schema (DDL) -> from_json;
-                                pass schema=None for raw bytes
+message_deserializer (json)     message_schema (a DDL string: JSON
+                                into that struct); None = raw bytes
 result_serializer (json)        every output column -> one JSON object
 bulk_limit                      bulk_limit (per-micro-batch admission)
 respect_deadline                respect_deadline (fail fast on a
@@ -50,13 +50,17 @@ Example::
     p.process()                          # drain-and-stop (AvailableNow)
 """
 
-import os
 import tempfile
 
 from pyspark.sql import DataFrame
-import pyspark.sql.functions as F
 
-BUS_FORMAT = "graft.sources.BusProvider"
+# constructor parameter -> bus source option; a parameter left at None is
+# not forwarded, so the source's own default applies
+SOURCE_OPTIONS = dict(
+    bulk_limit="bulkLimit", read_partitions="readPartitions",
+    respect_deadline="respectDeadline", retry_backoff_ms="retryBackoffMs",
+    lease_micros="leaseMicros", lease_heartbeat_ms="leaseHeartbeatMs",
+    start_at_committed="startAtCommitted")
 
 
 class PubSubPipeline:
@@ -65,11 +69,11 @@ class PubSubPipeline:
     ``pubsub_pipeline.py:132-167``)."""
 
     def __init__(self, spark, processor, incoming_subscription,
-                 outgoing_topic, message_schema=None, bus="memory",
-                 bulk_limit=20, read_partitions=4, respect_deadline=False,
-                 retry_backoff_ms=100, idempotent=False,
-                 checkpoint_dir=None, lease_micros=0,
-                 lease_heartbeat_ms=500, start_at_committed=False):
+                 outgoing_topic, message_schema=None, bus=None,
+                 bulk_limit=None, read_partitions=None, respect_deadline=None,
+                 retry_backoff_ms=None, idempotent=False,
+                 checkpoint_dir=None, lease_micros=None,
+                 lease_heartbeat_ms=None, start_at_committed=None):
         self.spark = spark
         self.processor = processor
         self.incoming_subscription = incoming_subscription
@@ -91,22 +95,12 @@ class PubSubPipeline:
         """The deserialized payload stream the processor consumes:
         ``payload`` column (struct per ``message_schema``, or raw binary
         when schema is None) plus the bus metadata columns."""
-        df = (self.spark.readStream.format(BUS_FORMAT)
-              .option("subscription", self.incoming_subscription)
-              .option("bus", self.bus)
-              .option("bulkLimit", self.bulk_limit)
-              .option("readPartitions", self.read_partitions)
-              .option("respectDeadline", self.respect_deadline)
-              .option("retryBackoffMs", self.retry_backoff_ms)
-              .option("leaseMicros", self.lease_micros)
-              .option("leaseHeartbeatMs", self.lease_heartbeat_ms)
-              .option("startAtCommitted", self.start_at_committed)
-              .load())
-        if self.message_schema is None:
-            return df.withColumn("payload", F.col("value"))
-        return df.withColumn(
-            "payload",
-            F.from_json(F.col("value").cast("string"), self.message_schema))
+        options = {opt: getattr(self, name)
+                   for name, opt in SOURCE_OPTIONS.items()
+                   if getattr(self, name) is not None}
+        return DataFrame(self.spark._jvm.graft.streaming.PyPipeline.stream(
+            self.spark._jsparkSession, self.incoming_subscription, self.bus,
+            self.message_schema, options), self.spark)
 
     def start(self, available_now: bool = False):
         """Start the pipeline; returns the pyspark StreamingQuery.

@@ -141,6 +141,10 @@ private class BusMicroBatchStream(subscription: String, busSpec: String,
 
   @volatile private var availableNowEnd: Option[Long] = None
 
+  // the end the last `latestOffset` read, for `reportLatestOffset`; read
+  // and written on the stream thread
+  private var lastEnd: Option[Long] = None
+
   // the highest offset known acked; read and written on the stream thread
   private var acked: Long = bus.committedOffset(subscription)
 
@@ -224,6 +228,7 @@ private class BusMicroBatchStream(subscription: String, busSpec: String,
       ensureHeartbeat()
     }
     val end = availableNowEnd.getOrElse(pullEndOffset())
+    lastEnd = Some(end)
     val rowCapped = limit match {
       case rl: org.apache.spark.sql.connector.read.streaming.ReadMaxRows =>
         math.min(end, from + rl.maxRows())
@@ -256,7 +261,10 @@ private class BusMicroBatchStream(subscription: String, busSpec: String,
     availableNowEnd = Some(pullEndOffset())
   }
 
-  override def reportLatestOffset(): Offset = BusOffset(pullEndOffset())
+  /** The end this trigger's `latestOffset` read, without a second bus
+    * call: the engine asks right after every `latestOffset`, and on a
+    * pulling transport ([[GcpPubsubBus]]) each end read is a pull. */
+  override def reportLatestOffset(): Offset = lastEnd.map(BusOffset(_)).orNull
 
   /** Split the micro-batch's offset range into up to `readPartitions`
     * contiguous slices, so a batch is read and deserialized by several

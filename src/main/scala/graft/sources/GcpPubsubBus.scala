@@ -104,9 +104,10 @@ trait PubsubPublisherApi {
   *
   * Scale shape: ONE adapter instance runs on the driver (or a daemon
   * feeding a BusService); executor read tasks receive (offset range,
-  * payload) via the normal DSv2 partition planning. The buffer holds at
-  * most the un-committed backlog of one micro-batch (`bulkLimit`-capped
-  * per pull), so memory is bounded by batch size, never the topic. */
+  * payload) via the normal DSv2 partition planning. The source reads the
+  * end, i.e. pulls, once per trigger, after acking the last batch, so
+  * with `pullBatch` ≤ `bulkLimit` the buffer holds at most the batch in
+  * flight and one pull: memory is bounded by batch size, never the topic. */
 final class GcpPubsubBus(project: String,
                          subscriber: PubsubSubscriberApi,
                          publisher: PubsubPublisherApi,

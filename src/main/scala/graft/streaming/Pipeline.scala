@@ -41,8 +41,12 @@ final case class JsonSerde(schema: DataType, failFast: Boolean = false) extends 
       from_json(value.cast("string"), schema.asInstanceOf[org.apache.spark.sql.types.StructType],
         Map("mode" -> "FAILFAST"))
     else from_json(value.cast("string"), schema)
-  override def serialize(payload: Column): Column =
-    to_json(payload).cast("binary")
+  override def serialize(payload: Column): Column = JsonSerde.toJsonBytes(payload)
+}
+
+object JsonSerde {
+  /** Any struct → UTF-8 JSON bytes; the serializer needs no schema. */
+  def toJsonBytes(payload: Column): Column = to_json(payload).cast("binary")
 }
 
 /** Raw-bytes serde: the message bytes come in as `payload` (and stay
@@ -172,13 +176,13 @@ object Pipeline {
     * (Bus.publishBatch) across hundreds of rows. */
   val PublishChunkRows = 512
 
-  /** The bus source every runner reads: `subscription` over `busSpec`
-    * with the given source options (any left out keep the source's
-    * defaults), and the message bytes deserialized into `payload`. */
+  /** The bus source every runner reads: `subscription` over `busSpec` with
+    * the given options (a null `busSpec` and any option left out keep the
+    * source's defaults), the message bytes deserialized into `payload`. */
   private[streaming] def busStream(spark: SparkSession, subscription: String,
       busSpec: String, serde: Serde, options: (String, Any)*): DataFrame =
-    options.foldLeft(spark.readStream.format(BusProvider.format)
-        .option("subscription", subscription).option("bus", busSpec)) {
+    (Option(busSpec).map("bus" -> _) ++ options).foldLeft(
+        spark.readStream.format(BusProvider.format).option("subscription", subscription)) {
       case (reader, (k, v)) => reader.option(k, v.toString)
     }.load().withColumn("payload", serde.deserialize(col("value")))
 

@@ -37,6 +37,8 @@ class GcpPubsubBusSpec extends AnyFunSuite {
     val subs = mutable.Map.empty[String, String] // subPath -> topicPath
     val modifyCalls = mutable.ArrayBuffer.empty[(Seq[String], Int)]
     var failNextPullWithDeadline = 0
+    /** The most messages ever pulled and not yet acked, after any pull. */
+    var maxOutstanding = 0
 
     def createTopic(path: String): Unit =
       topics.getOrElseUpdate(path, mutable.ArrayBuffer.empty)
@@ -60,12 +62,15 @@ class GcpPubsubBusSpec extends AnyFunSuite {
         throw new PubsubDeadlineExceeded("deadline exceeded on pull")
       }
       val log = topics(subs(subPath))
-      log.iterator.filter(m => !m.acked && m.outstandingAckId == null)
+      val got = log.iterator.filter(m => !m.acked && m.outstandingAckId == null)
         .take(maxMessages).map { m =>
           ackSeq += 1
           m.outstandingAckId = s"ack-$ackSeq"
           PubsubReceived(m.outstandingAckId, m.messageId, m.data, m.attributes)
         }.toSeq
+      maxOutstanding = math.max(maxOutstanding,
+        log.count(m => !m.acked && m.outstandingAckId != null))
+      got
     }
 
     override def acknowledge(subPath: String,
@@ -213,12 +218,43 @@ class GcpPubsubBusSpec extends AnyFunSuite {
       q.awaitTermination(60000)
       assert(fake.payloadsOf("projects/p/topics/out").sorted ==
         (1 to 30).map(i => s"""{"v":"processed:m$i"}""").sorted)
-      // the ack listener fires on QueryProgress, async wrt termination
-      val t0 = System.currentTimeMillis
-      while (fake.ackedCount("projects/p/topics/in") < 30 &&
-        System.currentTimeMillis - t0 < 10000) Thread.sleep(50)
+      // read at once, no polling: the source acks the last batch on the
+      // stream thread before an AvailableNow run terminates
       assert(fake.ackedCount("projects/p/topics/in") == 30,
         "every processed message must be acked after a successful publish")
     } finally BusFactories.unregister("gcpfake")
+  }
+
+  test("a live Pipeline pulls once per trigger: the receive buffer stays within two pulls") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.StructType
+    val fake = freshFake("in", "sub")
+    fake.createTopic("projects/p/topics/out")
+    val pullBatch = 10
+    BusFactories.register("gcpbuf",
+      spec => new GcpPubsubBus(spec.stripPrefix("gcpbuf://"), fake, fake, pullBatch))
+    try {
+      val busSpec = "gcpbuf://p"
+      val bus = BusRegistry.resolve(busSpec)
+      (1 to 100).foreach(i => bus.publish("in", s"""{"v":"m$i"}""".getBytes(UTF_8)))
+      val q = new Pipeline(
+        spark, "sub", "out", JsonSerde(new StructType().add("v", "string")),
+        df => df.select(col("payload.*")),
+        Files.createTempDirectory("graft-gcp-ckpt").toString,
+        bulkLimit = pullBatch, busSpec = busSpec).start()
+      try {
+        val t0 = System.currentTimeMillis
+        while (fake.ackedCount("projects/p/topics/in") < 100 && q.exception.isEmpty &&
+          System.currentTimeMillis - t0 < 60000) Thread.sleep(50)
+      } finally q.stop()
+      assert(q.exception.isEmpty)
+      assert(fake.ackedCount("projects/p/topics/in") == 100)
+      assert(fake.payloadsOf("projects/p/topics/out").size == 100)
+      // each trigger acks the last batch and pulls once, so at most the
+      // batch in flight and one pull ahead are outstanding; a second end
+      // read per trigger grows the buffer by a pull each trigger
+      assert(fake.maxOutstanding <= 2 * pullBatch,
+        s"${fake.maxOutstanding} messages pulled and unacked at once")
+    } finally BusFactories.unregister("gcpbuf")
   }
 }
