@@ -35,7 +35,9 @@ subscriber/publisher clients    the ``bus`` option string; transports
 Unlike the reference (at-least-once with duplicate publishes on a crash
 between publish and ack), ``idempotent=True`` publishes with
 content-derived replay-stable keys the bus absorbs -- effective
-exactly-once across restarts.
+exactly-once across restarts. It needs a transport with idempotent
+publish (the memory and socket buses); Pub/Sub has none, and ``start``
+refuses it.
 
 Example::
 

@@ -4,8 +4,19 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.collection.mutable.ArrayBuffer
 
-/** The bus surface the engine talks to (SURVEY §7 M5) — one interface,
-  * three transports:
+/** The bus surface (SURVEY §7 M5) — three traits, three transports.
+  *
+  *  - [[Transport]]: the data plane the engine calls — publish, the
+  *    offset log (`endOffset`, `committedOffset`, `read`, `commit`) and
+  *    the pull lease. The DSv2 source, the pipeline sinks and the test
+  *    client see only this, so they are transport-agnostic:
+  *    `BusRegistry.resolve(spec)` turns the `bus` option string into a
+  *    live transport ON WHICHEVER JVM asks (driver or executor —
+  *    partitions carry the spec string, never a connection).
+  *  - [[IdempotentPublish]]: what the exactly-once sink needs besides.
+  *  - [[Bus]]: both, plus the test harness.
+  *
+  * The transports:
   *
   *  - [[InMemoryBus]]: the single-JVM test double, a [[BusCore]] singleton
   *    (its methods are also JVM statics, for py4j callers),
@@ -14,24 +25,10 @@ import scala.collection.mutable.ArrayBuffer
   *    reference's core semantic and must be proven across a real process
   *    boundary, like the reference's own `test_client.py:6-31`
   *    cross-process harness),
-  *  - [[GcpPubsubBus]]: the Pub/Sub client adapter, plugged in by scheme
-  *    through [[BusFactories]].
-  *
-  * Everything the connector, pipelines, and test clients do goes through
-  * this trait, so the DSv2 source and the pipeline runners are
-  * transport-agnostic: `BusRegistry.resolve(spec)` turns the
-  * `bus` option string into a live transport ON WHICHEVER JVM asks
-  * (driver or executor — partitions carry the spec string, never a
-  * connection).
-  *
-  * The fault-injection surface is part of the trait on purpose: the
-  * retry/backoff/partial-pull contracts (`pubsub_pipeline.py:204-211`)
-  * are only cross-process-proven if the failures themselves can be
-  * injected through the wire.
+  *  - [[GcpPubsubBus]]: the Pub/Sub client adapter, a [[Transport]] only,
+  *    plugged in by scheme through [[BusFactories]].
   */
-trait Bus {
-  def createTopic(topic: String): Unit
-  def createSubscription(topic: String, name: String): Unit
+trait Transport {
   def publish(topic: String, data: Array[Byte],
               attributes: Map[String, String] = Map.empty): String
 
@@ -40,8 +37,6 @@ trait Bus {
     * `jvm...publish(topic, bytes)` needs this. Same semantics. */
   final def publish(topic: String, data: Array[Byte]): String =
     publish(topic, data, Map.empty)
-
-  def publishIdempotent(topic: String, key: String, data: Array[Byte]): Boolean
 
   /** Publish many payloads in one call — ONE wire round trip on the
     * socket transport (the per-row form opens a connection per message,
@@ -56,16 +51,10 @@ trait Bus {
     data.size
   }
 
-  /** Batched idempotent publish (see [[publishBatch]] for the transport
-    * rationale, [[publishIdempotent]] for the key contract). Returns how
-    * many were actually appended (replayed keys are absorbed). */
-  def publishIdempotentBatch(topic: String, keyed: Seq[(String, Array[Byte])]): Int =
-    keyed.count { case (k, d) => publishIdempotent(topic, k, d) }
   def endOffset(name: String): Long
   def committedOffset(name: String): Long
   def read(name: String, from: Long, until: Long): Seq[InMemoryBus.BusMessage]
   def commit(name: String, upTo: Long): Unit
-  def payloads(name: String): Seq[Array[Byte]]
 
   // --- pull lease (the modify_ack_deadline analog, round 13) ---------
   // Pub/Sub gives every outstanding message an ack deadline that the
@@ -76,16 +65,13 @@ trait Bus {
   // competing consumer pulls nothing; if the holder stalls past its
   // deadline without extending, the lease expires and the backlog is
   // deliverable again (at-least-once redelivery, same contract as a
-  // restart). Deadlines are in the bus's deterministic LOGICAL clock
-  // (micros; ticks on publish, advanced explicitly in tests) so lease
-  // semantics are replayable, never wall-clock flaky.
+  // restart). On the test doubles deadlines are in the bus's
+  // deterministic LOGICAL clock (micros; ticks on publish, advanced
+  // explicitly in tests) so lease semantics are replayable, never
+  // wall-clock flaky.
 
-  /** Logical-clock "now" in micros (the clock publishes tick). */
+  /** "Now" in micros on the clock lease deadlines are read against. */
   def nowMicros(): Long
-
-  /** Advance the logical clock (test support — how a spec makes a lease
-    * expire deterministically). */
-  def advanceClock(byMicros: Long): Unit
 
   /** Acquire (or renew, for the same holder) the subscription's pull
     * lease until `deadlineMicros`. Returns false while a DIFFERENT
@@ -100,7 +86,44 @@ trait Bus {
     * sound. Setting a deadline ≤ now is the nack shape: the holder
     * surrenders the backlog for immediate redelivery. */
   def modifyAckDeadline(name: String, holder: String, newDeadlineMicros: Long): Boolean
-  // --- fault injection / test support --------------------------------
+}
+
+/** A publish that absorbs replays: a key the topic has already taken is
+  * not appended again. This is what turns a replayed batch into no
+  * duplicate, so only a transport that really has it may carry the
+  * exactly-once sink. */
+trait IdempotentPublish {
+  /** Append `data` unless `key` was already published to `topic`;
+    * returns whether it was appended. */
+  def publishIdempotent(topic: String, key: String, data: Array[Byte]): Boolean
+
+  /** Batched idempotent publish (see [[Transport.publishBatch]] for the
+    * transport rationale, [[publishIdempotent]] for the key contract).
+    * Returns how many were actually appended (replayed keys are
+    * absorbed). */
+  def publishIdempotentBatch(topic: String, keyed: Seq[(String, Array[Byte])]): Int =
+    keyed.count { case (k, d) => publishIdempotent(topic, k, d) }
+}
+
+/** A test bus: the data plane with idempotent publish, plus the harness
+  * verbs that set up, inspect and break it. The harness is part of this
+  * trait on purpose: the retry/backoff/partial-pull contracts
+  * (`pubsub_pipeline.py:204-211`) are only cross-process-proven if the
+  * failures themselves can be injected through the wire, so
+  * [[BusService]] serves exactly these methods and [[SocketBus]] speaks
+  * them. A production adapter implements [[Transport]] instead and
+  * leaves fault injection to a mocked client, the reference's strategy
+  * (`test_pubsub_pipeline.py:48-52`). */
+trait Bus extends Transport with IdempotentPublish {
+  def createTopic(topic: String): Unit
+  def createSubscription(topic: String, name: String): Unit
+  def payloads(name: String): Seq[Array[Byte]]
+
+  /** Advance the logical clock (how a spec makes a lease expire
+    * deterministically). */
+  def advanceClock(byMicros: Long): Unit
+
+  // --- fault injection --------------------------------------------------
   def failNextPulls(name: String, n: Int): Unit
   def failNextCommits(name: String, n: Int): Unit
   def capNextPulls(name: String, maxPerPull: Long, times: Int): Unit
@@ -114,7 +137,7 @@ trait Bus {
   * a [[SocketBus]] opens one connection per call, so resolving on an
   * executor is free and nothing needs pooling or serializing. */
 object BusRegistry {
-  def resolve(spec: String): Bus = spec match {
+  def resolve(spec: String): Transport = spec match {
     case null | "" | "memory" => InMemoryBus
     case s if s.startsWith("socket://") =>
       val hp = s.stripPrefix("socket://")
@@ -129,6 +152,16 @@ object BusRegistry {
         throw new IllegalArgumentException(
           s"unknown bus spec '$other' (expected 'memory', " +
             "'socket://host:port', or a BusFactories-registered scheme)"))
+  }
+
+  /** [[resolve]] for the exactly-once sink: a transport without
+    * idempotent publish would re-publish a replayed batch, so it is
+    * refused rather than run at-least-once under an exactly-once name. */
+  def resolveIdempotent(spec: String): IdempotentPublish = resolve(spec) match {
+    case t: IdempotentPublish => t
+    case t => throw new IllegalArgumentException(
+      s"bus '$spec' (${t.getClass.getSimpleName}) has no idempotent publish, " +
+        "so it cannot absorb a replayed batch: idempotent = true needs one")
   }
 }
 

@@ -84,7 +84,6 @@ private class BusTable(props: Map[String, String]) extends Table with SupportsRe
             readPartitions = options.getInt("readPartitions", 4),
             retryBackoffMs = options.getLong("retryBackoffMs", 100L),
             respectDeadline = options.getBoolean("respectDeadline", false),
-            maxBytesPerPull = options.getLong("maxBytesPerPull", Long.MaxValue),
             leaseMicros = options.getLong("leaseMicros", 0L),
             leaseHeartbeatMs = options.getLong("leaseHeartbeatMs", 500L),
             startAtCommitted = options.getBoolean("startAtCommitted", false))
@@ -126,8 +125,8 @@ case class BusOffset(offset: Long) extends Offset {
 private class BusMicroBatchStream(subscription: String, busSpec: String,
                                   bulkLimit: Int, readPartitions: Int,
                                   retryBackoffMs: Long, respectDeadline: Boolean,
-                                  maxBytesPerPull: Long, leaseMicros: Long,
-                                  leaseHeartbeatMs: Long, startAtCommitted: Boolean)
+                                  leaseMicros: Long, leaseHeartbeatMs: Long,
+                                  startAtCommitted: Boolean)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow with Logging {
 
@@ -137,7 +136,7 @@ private class BusMicroBatchStream(subscription: String, busSpec: String,
   // transport behind the `bus` option: the in-JVM singleton (default) or
   // a SocketBus client to a BusService daemon in another process — the
   // connector logic below is identical either way (r8 verdict #1)
-  private val bus: Bus = BusRegistry.resolve(busSpec)
+  private val bus: Transport = BusRegistry.resolve(busSpec)
 
   @volatile private var availableNowEnd: Option[Long] = None
 
@@ -229,29 +228,11 @@ private class BusMicroBatchStream(subscription: String, busSpec: String,
     }
     val end = availableNowEnd.getOrElse(pullEndOffset())
     lastEnd = Some(end)
-    val rowCapped = limit match {
+    val capped = limit match {
       case rl: org.apache.spark.sql.connector.read.streaming.ReadMaxRows =>
         math.min(end, from + rl.maxRows())
       case _ => end
     }
-    // byte-based admission on top of the row cap (ReadMaxBytes analog):
-    // walk payload sizes and stop once the batch would exceed the budget —
-    // but always admit at least one message, or an oversized message
-    // would stall the subscription forever.
-    val capped =
-      if (maxBytesPerPull == Long.MaxValue || rowCapped <= from) rowCapped
-      else {
-        var bytes = 0L
-        var o = from
-        val it = bus.read(subscription, from, rowCapped).iterator
-        var stop = false
-        while (!stop && it.hasNext) {
-          bytes += it.next().data.length
-          if (bytes > maxBytesPerPull && o > from) stop = true
-          else o += 1
-        }
-        o
-      }
     BusOffset(math.max(from, capped))
   }
 

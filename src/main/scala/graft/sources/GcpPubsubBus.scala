@@ -67,7 +67,7 @@ trait PubsubPublisherApi {
               attributes: Map[String, String]): String
 }
 
-/** [[Bus]] adapter over the Google Cloud Pub/Sub client surface —
+/** [[Transport]] adapter over the Google Cloud Pub/Sub client surface —
   * "What's missing #1" of the r13 verdict: the one piece a production
   * user of the reference writes first. The engine's bus model is an
   * offset log (read(from, until) / commit(upTo)); Pub/Sub is ack-id
@@ -95,12 +95,14 @@ trait PubsubPublisherApi {
   * ack-ids) and they re-enter the buffer at NEW offsets — the same
   * duplicate window the reference has between publish and ack, and the
   * one the source's `startAtCommitted` clamp bounds after a lease
-  * handoff.
+  * handoff. Pub/Sub has no idempotent publish either, so this is not an
+  * [[IdempotentPublish]] and `Pipeline(idempotent = true)` refuses it.
   *
-  * Clock: Pub/Sub deadlines are wall-clock; `nowMicros` is wall time
-  * and `advanceClock` is a test-double-only verb (unsupported here, as
-  * is the whole fault-injection surface — inject through a mocked
-  * [[PubsubSubscriberApi]] instead, the reference's own strategy).
+  * Only the data plane is here. Topics and subscriptions must exist
+  * before use, as the reference requires (`pubsub_pipeline.py:81-83`);
+  * creating them is the admin clients' job. Faults are injected through
+  * a mocked [[PubsubSubscriberApi]], the reference's own strategy.
+  * Pub/Sub deadlines are wall-clock, so `nowMicros` is wall time.
   *
   * Scale shape: ONE adapter instance runs on the driver (or a daemon
   * feeding a BusService); executor read tasks receive (offset range,
@@ -111,7 +113,7 @@ trait PubsubPublisherApi {
 final class GcpPubsubBus(project: String,
                          subscriber: PubsubSubscriberApi,
                          publisher: PubsubPublisherApi,
-                         pullBatch: Int = 20) extends Bus {
+                         pullBatch: Int = 20) extends Transport {
 
   private def topicPath(t: String) = s"projects/$project/topics/$t"
   private def subPath(s: String) = s"projects/$project/subscriptions/$s"
@@ -126,28 +128,9 @@ final class GcpPubsubBus(project: String,
   private def state(name: String): SubState =
     subs.computeIfAbsent(name, _ => new SubState)
 
-  /** Pub/Sub's admin surface (CreateTopic/CreateSubscription RPCs on
-    * the admin clients) is out of the data-plane adapter's scope — the
-    * reference requires "topics and subscriptions must exist before
-    * using this class" (`pubsub_pipeline.py:81-83`); same contract. */
-  override def createTopic(topic: String): Unit = ()
-  override def createSubscription(topic: String, name: String): Unit = ()
-
   override def publish(topic: String, data: Array[Byte],
                        attributes: Map[String, String]): String =
     publisher.publish(topicPath(topic), data, attributes)
-
-  /** Pub/Sub has no native idempotent publish; exactly-once sits on the
-    * SUBSCRIBE side (exactly-once delivery) or an attribute-keyed dedup
-    * at the consumer. The adapter publishes with the key as an
-    * attribute so a downstream consumer CAN dedup, and reports
-    * "appended" — the engine's crash-replay sink only calls this on the
-    * replay path, where the attribute is the dedup hook. */
-  override def publishIdempotent(topic: String, key: String,
-                                 data: Array[Byte]): Boolean = {
-    publisher.publish(topicPath(topic), data, Map("graft-idem-key" -> key))
-    true
-  }
 
   override def endOffset(name: String): Long = synchronized {
     val s = state(name)
@@ -201,15 +184,8 @@ final class GcpPubsubBus(project: String,
     }
   }
 
-  override def payloads(name: String): Seq[Array[Byte]] =
-    throw new UnsupportedOperationException(
-      "payloads() is a test-double verb; Pub/Sub keeps no replayable log")
-
   // --- lease: per-message ack deadlines under one subscription lease --
   override def nowMicros(): Long = System.currentTimeMillis() * 1000L
-  override def advanceClock(byMicros: Long): Unit =
-    throw new UnsupportedOperationException(
-      "Pub/Sub deadlines are wall-clock; advanceClock is test-double-only")
 
   private def outstanding(s: SubState): Seq[String] =
     s.buffered.map(_.ackId).toSeq
@@ -254,20 +230,6 @@ final class GcpPubsubBus(project: String,
         true
       }
     }
-
-  // --- fault injection: not a production verb -------------------------
-  private def noInjection = throw new UnsupportedOperationException(
-    "fault injection is for the test doubles; mock PubsubSubscriberApi/" +
-      "PubsubPublisherApi instead (the reference's test strategy)")
-  override def failNextPulls(name: String, n: Int): Unit = noInjection
-  override def failNextCommits(name: String, n: Int): Unit = noInjection
-  override def capNextPulls(name: String, maxPerPull: Long, times: Int): Unit =
-    noInjection
-  override def failNextPublishes(topic: String, n: Int): Unit = noInjection
-  override def failPublishesAfter(topic: String, after: Int, n: Int): Unit =
-    noInjection
-  override def rewindCommitted(name: String, to: Long): Unit = noInjection
-  override def reset(): Unit = synchronized { subs.clear() }
 }
 
 /** Process-wide registry of custom bus factories, keyed by spec scheme
@@ -282,14 +244,14 @@ final class GcpPubsubBus(project: String,
   * string locally — same rule as the in-JVM test double. */
 object BusFactories {
   private val factories =
-    new ConcurrentHashMap[String, String => Bus]()
+    new ConcurrentHashMap[String, String => Transport]()
   // one live instance per spec string: a stateful adapter (the
   // GcpPubsubBus receive buffer) must serve offset planning and range
   // reads from the SAME instance, and resolve() is called once per
   // planning step and once per read task
-  private val instances = new ConcurrentHashMap[String, Bus]()
+  private val instances = new ConcurrentHashMap[String, Transport]()
 
-  def register(scheme: String, factory: String => Bus): Unit = {
+  def register(scheme: String, factory: String => Transport): Unit = {
     factories.put(scheme, factory)
     instances.clear()
   }
@@ -299,7 +261,7 @@ object BusFactories {
     instances.clear()
   }
 
-  private[sources] def resolve(spec: String): Option[Bus] = {
+  private[sources] def resolve(spec: String): Option[Transport] = {
     val i = spec.indexOf("://")
     if (i <= 0) None
     else Option(factories.get(spec.substring(0, i)))

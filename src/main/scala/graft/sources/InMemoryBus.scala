@@ -21,7 +21,7 @@ package graft.sources
   *    by the checkpoint WAL (SURVEY §3.4).
   *  - Messages above the committed prefix are redelivered on restart
   *    (at-least-once; duplicates possible, same as the reference §2-D).
-  *  - `failNextPulls(sub, n)` injects transient pull failures to exercise
+  *  - The [[Bus]] harness injects transient pull failures to exercise
   *    the retry contract (`pubsub_pipeline.py:204-211`, test 3 in
   *    `test_pubsub_pipeline.py:107-143`).
   *  - `publishIdempotent` absorbs replays of an already-delivered batch
@@ -36,7 +36,7 @@ package graft.sources
   * JVM). For real multi-process execution — separate executor JVMs, or a
   * bus that must survive the pipeline's death — use a [[BusService]]
   * daemon and the `bus = socket://host:port` option; the connector code
-  * is identical either way (it only sees the [[Bus]] trait).
+  * is identical either way (it only sees the [[Transport]] trait).
   */
 object InMemoryBus extends BusCore {
 

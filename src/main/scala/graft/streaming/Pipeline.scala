@@ -91,14 +91,18 @@ final class Pipeline(
     /** Publish with content-derived idempotence keys: a batch replayed
       * after crash-before-checkpoint re-publishes the same keys and the
       * bus absorbs them — effective exactly-once, vs the reference's
-      * duplicates (§2-D). A row's key is (pipeline identity, batchId,
-      * content hash, rank among the batch's rows with that hash) — see
-      * [[Pipeline.idempotenceKeys]] — so it depends only on the batch's
-      * row multiset: stable under shuffling transforms and under any
-      * partition count, and scoped per pipeline (two pipelines sharing
-      * an output topic, or a restart with a fresh checkpoint dir, never
-      * collide on keys). Requires only that the transform is
-      * deterministic as a multiset of rows per batch.
+      * duplicates (§2-D). This needs a transport with idempotent publish
+      * ([[graft.sources.IdempotentPublish]]): the memory and socket buses
+      * have it, Pub/Sub ([[graft.sources.GcpPubsubBus]]) does not, and
+      * `start()` refuses one without it. A row's key is (pipeline
+      * identity, batchId, content hash, rank among the batch's rows
+      * with that hash) — see [[Pipeline.idempotenceKeys]] — so it
+      * depends only on the batch's row multiset: stable under shuffling
+      * transforms and under any partition count, and scoped per
+      * pipeline (two pipelines sharing an output topic, or a restart
+      * with a fresh checkpoint dir, never collide on keys). Requires
+      * only that the transform is deterministic as a multiset of rows
+      * per batch.
       *
       * Upgrade effect: keys used to be (pipeline identity, batchId,
       * partition id, index). A batch published by a build with the old
@@ -115,9 +119,6 @@ final class Pipeline(
     /** Fail fast on a transient pull error instead of retrying — the
       * reference's `respect_deadline=True`. */
     respectDeadline: Boolean = false,
-    /** Byte-budget admission per micro-batch on top of `bulkLimit`
-      * (ReadMaxBytes analog; always admits at least one message). */
-    maxBytesPerPull: Long = Long.MaxValue,
     /** Bus transport: `"memory"` (in-JVM singleton, the default) or
       * `"socket://host:port"` to a [[graft.sources.BusService]] daemon
       * in its own process. Only the SPEC crosses to executors; every
@@ -128,7 +129,7 @@ final class Pipeline(
       * flight the subscription's backlog is not deliverable to a
       * competing consumer, and the source's background heartbeat keeps
       * the lease alive past slow batches (see
-      * [[graft.sources.Bus.modifyAckDeadline]]). */
+      * [[graft.sources.Transport.modifyAckDeadline]]). */
     leaseMicros: Long = 0L,
     /** Wall-clock heartbeat period for lease extension. */
     leaseHeartbeatMs: Long = 500L,
@@ -146,7 +147,6 @@ final class Pipeline(
       "readPartitions" -> readPartitions,
       "retryBackoffMs" -> retryBackoffMs,
       "respectDeadline" -> respectDeadline,
-      "maxBytesPerPull" -> maxBytesPerPull,
       "leaseMicros" -> leaseMicros,
       "leaseHeartbeatMs" -> leaseHeartbeatMs,
       "startAtCommitted" -> startAtCommitted)
@@ -173,7 +173,7 @@ final class Pipeline(
 object Pipeline {
   /** Rows per publish batch in the executor sinks — bounds per-chunk
     * memory while amortizing the socket transport's per-call connection
-    * (Bus.publishBatch) across hundreds of rows. */
+    * (Transport.publishBatch) across hundreds of rows. */
   val PublishChunkRows = 512
 
   /** The bus source every runner reads: `subscription` over `busSpec` with
@@ -228,11 +228,16 @@ object Pipeline {
     * serializes every column of the already-transformed streaming frame
     * `out` into one `data` payload per row and publishes each micro-batch
     * from the executors (no collect-to-driver). The sink only publishes:
-    * the bus source acks each batch once it is committed. */
+    * the bus source acks each batch once it is committed.
+    *
+    * `idempotent = true` resolves the output transport on the driver
+    * first and throws `IllegalArgumentException`, starting nothing, if it
+    * has no idempotent publish. */
   private[streaming] def startPublish(
       out: DataFrame, serialize: Column => Column,
       outTopic: String, busSpec: String, checkpointDir: String,
       availableNow: Boolean, idempotent: Boolean): StreamingQuery = {
+    if (idempotent) BusRegistry.resolveIdempotent(busSpec)
     val pipe = pipelineId(checkpointDir)
     val data = out.select(serialize(struct(out.columns.map(col).toIndexedSeq: _*)).as("data"))
     startQuery(data, checkpointDir, availableNow) {
@@ -245,7 +250,7 @@ object Pipeline {
           val prefix = s"$pipe-$batchId-"
           byContent(batch, batch.sparkSession.sparkContext.defaultParallelism)
             .foreachPartition { rows: Iterator[Row] =>
-              val bus = BusRegistry.resolve(busSpec)
+              val bus = BusRegistry.resolveIdempotent(busSpec)
               // chunked batch publish: one wire round trip per chunk on
               // the socket transport instead of one per ROW
               ranked(rows).grouped(PublishChunkRows).foreach(chunk =>

@@ -25,7 +25,7 @@ import graft.operators.GraphOps
   * disjoint order sets, so whole-order message granularity is exactly
   * what makes append ≡ rebuild hold (an order's pairs enter the state
   * once, with no cross-message basket splits). Publisher duplicates are
-  * the producer's contract ([[graft.sources.Bus.publishIdempotent]]);
+  * the producer's contract ([[graft.sources.IdempotentPublish.publishIdempotent]]);
   * REPLAYED micro-batches (crash between state commit and checkpoint)
   * are absorbed here: Structured Streaming replays a batch under the
   * SAME batchId with the same offset range, and [[applyBatch]] skips any

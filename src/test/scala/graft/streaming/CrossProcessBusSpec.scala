@@ -12,8 +12,8 @@ import graft.sources.SocketBus
 
 /** The pipeline contracts against a bus daemon in its OWN PROCESS
   * (r8 verdict #1): the DSv2 source pulls, the sink publishes, and the
-  * ack listener commits — all over the socket transport to a separate
-  * JVM, so the ack-on-publish-success guarantee
+  * source acks each committed batch — all over the socket transport to
+  * a separate JVM, so the ack-on-publish-success guarantee
   * (`pubsub_pipeline.py:82-84`) is proven across a real process
   * boundary, like the reference's own cross-process harness
   * (`test_client.py:6-31`). Fault injection ALSO rides the wire, so the

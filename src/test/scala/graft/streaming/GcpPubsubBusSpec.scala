@@ -186,12 +186,43 @@ class GcpPubsubBusSpec extends AnyFunSuite {
     assert(bus.endOffset("s") == 1L) // retry drains normally
   }
 
-  test("publishIdempotent carries the key as an attribute (consumer-side dedup hook)") {
+  test("the adapter is a data-plane Transport: harness verbs and idempotent publish do not type-check") {
     val fake = freshFake("t", "s")
     val bus = new GcpPubsubBus("p", fake, fake)
-    assert(bus.publishIdempotent("t", "k1", "d".getBytes(UTF_8)))
-    val stored = fake.topics("projects/p/topics/t").head
-    assert(stored.attributes.get("graft-idem-key").contains("k1"))
+    val spec = "memory"
+    assertCompiles("""bus.endOffset("s")""")
+    assertCompiles("""BusRegistry.resolve(spec).endOffset("s")""")
+    assertTypeError("""bus.failNextPulls("s", 1)""")
+    assertTypeError("""bus.payloads("s")""")
+    assertTypeError("""bus.reset()""")
+    assertTypeError("""bus.publishIdempotent("t", "k", Array[Byte]())""")
+    assertTypeError("""BusRegistry.resolve(spec).failNextPulls("s", 1)""")
+  }
+
+  test("Pipeline(idempotent = true) refuses the adapter at start(): nothing is published or acked") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.StructType
+    val fake = freshFake("in", "sub")
+    fake.createTopic("projects/p/topics/out")
+    BusFactories.register("gcpidem",
+      spec => new GcpPubsubBus(spec.stripPrefix("gcpidem://"), fake, fake))
+    try {
+      val busSpec = "gcpidem://p"
+      (1 to 5).foreach(i => BusRegistry.resolve(busSpec)
+        .publish("in", s"""{"v":"m$i"}""".getBytes(UTF_8)))
+      val active = spark.streams.active.length
+      val e = intercept[IllegalArgumentException] {
+        new Pipeline(
+          spark, "sub", "out", JsonSerde(new StructType().add("v", "string")),
+          df => df.select(col("payload.*")),
+          Files.createTempDirectory("graft-gcp-ckpt").toString,
+          idempotent = true, busSpec = busSpec).start(availableNow = true)
+      }
+      assert(e.getMessage.contains(busSpec) && e.getMessage.contains("idempotent"))
+      assert(spark.streams.active.length == active)
+      assert(fake.payloadsOf("projects/p/topics/out").isEmpty)
+      assert(fake.ackedCount("projects/p/topics/in") == 0)
+    } finally BusFactories.unregister("gcpidem")
   }
 
   test("end-to-end: the Pipeline runner streams off a BusFactories-registered GCP adapter, ack-on-publish-success") {

@@ -39,7 +39,8 @@ class PipelineSpec extends SparkSpec {
   private val fixture =
     """{"data":"This is some json data that is to processed","nested":{"nestedData":"This is just some more data"}}"""
 
-  /** Acks arrive via an async listener after epoch commit — poll. */
+  /** The source acks a committed batch at the next trigger, on the
+    * stream thread — poll. */
   private def awaitCommitted(sub: String, expect: Long, timeoutMs: Long = 20000): Long = {
     val deadline = System.currentTimeMillis + timeoutMs
     while (System.currentTimeMillis < deadline &&
@@ -105,7 +106,7 @@ class PipelineSpec extends SparkSpec {
     val q1 = pipe().start(availableNow = true)
     intercept[Exception] { q1.awaitTermination(60000) }
     // publish failed → input NOT acked (test_pubsub_pipeline.py:90,93);
-    // give the async listener time to (wrongly) ack before asserting
+    // give a wrong ack time to land before asserting
     Thread.sleep(1000)
     assert(InMemoryBus.committedOffset(inSub) === 0)
     assert(InMemoryBus.payloads(outSub).isEmpty)
@@ -349,26 +350,6 @@ class PipelineSpec extends SparkSpec {
     assert(InMemoryBus.payloads(outSub).map(new String(_, UTF_8)) === Seq(fixture))
     // two injected failures × 300 ms backoff = at least 600 ms of sleeping
     assert((System.nanoTime() - t0) / 1e6 >= 600.0)
-  }
-
-  test("maxBytesPerPull caps each micro-batch by payload bytes") {
-    val (inTopic, inSub, outTopic, outSub) = fresh("c11")
-    // ~42-byte messages; a 100-byte budget admits at most 2 per batch
-    (1 to 10).foreach(i => InMemoryBus.publish(inTopic,
-      f"""{"data":"m$i%02d","nested":{"nestedData":"x"}}""".getBytes(UTF_8)))
-
-    val q = new Pipeline(
-      spark, inSub, outTopic, JsonSerde(payloadSchema),
-      df => df.select(col("payload.*")),
-      Files.createTempDirectory("graft-ckpt").toString,
-      bulkLimit = 20, idempotent = false, readPartitions = 4,
-      retryBackoffMs = 0L, respectDeadline = false,
-      maxBytesPerPull = 100L).start(availableNow = true)
-    q.awaitTermination(60000)
-    assert(InMemoryBus.payloads(outSub).size === 10)
-    assert(awaitCommitted(inSub, 10) === 10)
-    assert(q.recentProgress.forall(_.numInputRows <= 2),
-      s"batch sizes: ${q.recentProgress.map(_.numInputRows).toSeq}")
   }
 
   test("idempotent keys are scoped per pipeline: shared output topic, no collision") {
@@ -671,7 +652,7 @@ class PipelineSpec extends SparkSpec {
     InMemoryBus.failNextCommits(inSub, 1)
     val q1 = pipe().start(availableNow = true)
     q1.awaitTermination(60000)
-    Thread.sleep(1000) // let the async listener hit the injected failure
+    Thread.sleep(1000) // margin for a late ack to show up
     // published, but the ack RPC was lost
     assert(InMemoryBus.payloads(outSub).size === 4)
     assert(InMemoryBus.committedOffset(inSub) === 0)
@@ -808,7 +789,7 @@ class PipelineSpec extends SparkSpec {
     assert(InMemoryBus.committedOffset(rightSub) === 5)
   }
 
-  test("a failed start leaves no ack listener behind") {
+  test("a failed start registers no query listener") {
     val (_, inSub, outTopic, _) = fresh("fs")
     // a regular file where the checkpoint directory should be: start() throws
     val notADir = Files.createTempFile("graft-ckpt", ".file").toString

@@ -237,7 +237,7 @@ class ProjectionMaintenanceSpec extends SparkSpec {
     assert(incr.nonEmpty)
   }
 
-  test("a failed start leaves no ack listener behind") {
+  test("a failed start registers no query listener") {
     val id = java.util.UUID.randomUUID().toString.take(8)
     val topic = s"pm-fs-$id"; val sub = s"pm-fssub-$id"
     InMemoryBus.createTopic(topic)
