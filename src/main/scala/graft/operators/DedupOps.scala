@@ -151,9 +151,9 @@ object DedupOps {
     * anywhere, so the group means hash-match DuckDB exactly.
     *
     * scan-guard: dedup_minhash_calibration */
-  def minhashCalibration(documents: DataFrame, shingleK: Int = 3,
-                         nHashes: Int = 32,
-                         rowsPerBand: Int = 4): DataFrame = {
+  def minhashCalibration(documents: DataFrame, shingleK: Int = ShingleK,
+                         nHashes: Int = NHashes,
+                         rowsPerBand: Int = RowsPerBand): DataFrame = {
     val nBands = nHashes / rowsPerBand
     val enriched = graft.plans.PlanPins.lazyPin(documents
       .select(col("doc_id"),
@@ -201,6 +201,15 @@ object DedupOps {
       .orderBy("lane_matches")
   }
 
+  /** `dedup_near_minhash`'s LSH parameters: word k-shingles, signature
+    * length, hashes per band and the verify threshold. The rebuild, the
+    * batch replay ([[nearMinhashIncremental]]) and the streaming
+    * maintainer read them here, so append ≡ rebuild cannot drift. */
+  private[graft] val ShingleK = 3
+  private[graft] val NHashes = 32
+  private[graft] val RowsPerBand = 4
+  private[graft] val JaccardTau = 0.7
+
   /** `dedup_near_minhash`: near-duplicate clustering via shingling →
     * MinHash → banded LSH. Signature: `nHashes` minhashes over word
     * 3-shingles; bands of `rowsPerBand` hashes are hashed to a band key;
@@ -215,8 +224,9 @@ object DedupOps {
     * it is oracled EXACTLY against generated full-pipeline SQL
     * ([[graft.OracleGen.nearMinhashSql]]); ScalaTest additionally asserts
     * the planted near-dup pairs are found. */
-  def nearMinhash(documents: DataFrame, shingleK: Int = 3, nHashes: Int = 32,
-                  rowsPerBand: Int = 4, jaccardTau: Double = 0.7): DataFrame = {
+  def nearMinhash(documents: DataFrame, shingleK: Int = ShingleK,
+                  nHashes: Int = NHashes, rowsPerBand: Int = RowsPerBand,
+                  jaccardTau: Double = JaccardTau): DataFrame = {
     // compiled custom expressions (graft.functions.ShingleExpressions):
     // the pure-HOF formulation is interpreted per element and profiled
     // ~10s at sf0.1; one compiled pass per row is ~100× cheaper.
@@ -312,8 +322,8 @@ object DedupOps {
     * Jaccard — the signature alone only estimates it; this is the
     * signature-store shape a production LSH dedup service sinks. */
   private[graft] def minhashEnriched(documents: DataFrame,
-                                     shingleK: Int = 3,
-                                     nHashes: Int = 32): DataFrame = {
+                                     shingleK: Int = ShingleK,
+                                     nHashes: Int = NHashes): DataFrame = {
     val sh = shingleSets(documents, shingleK)
     sh.select(col("doc_id"), col("sh"),
       ShingleExpressions.minHashSignature(col("sh"), nHashes).as("sig"))
@@ -361,9 +371,9 @@ object DedupOps {
     * exactly at the scale the slug exists to price. */
   private[graft] def deltaMinhashPairs(store: Option[DataFrame],
                                        delta: DataFrame,
-                                       nHashes: Int = 32,
-                                       rowsPerBand: Int = 4,
-                                       jaccardTau: Double = 0.7,
+                                       nHashes: Int = NHashes,
+                                       rowsPerBand: Int = RowsPerBand,
+                                       jaccardTau: Double = JaccardTau,
                                        storeBands: Option[DataFrame] = None,
                                        broadcastDelta: Boolean = false)
       : DataFrame = {
@@ -408,9 +418,9 @@ object DedupOps {
     * streaming maintainer pays per micro-batch.
     * scan-guard: dedup_minhash_incr */
   def nearMinhashIncremental(documents: DataFrame, nBatches: Int = 4,
-                             shingleK: Int = 3, nHashes: Int = 32,
-                             rowsPerBand: Int = 4,
-                             jaccardTau: Double = 0.7): DataFrame = {
+                             shingleK: Int = ShingleK, nHashes: Int = NHashes,
+                             rowsPerBand: Int = RowsPerBand,
+                             jaccardTau: Double = JaccardTau): DataFrame = {
     // each append's enriched projection is pinned: it is consumed by
     // its own band join, by every later level's store side, and by the
     // verify re-attach — unpinned, the shingle kernel would re-run per

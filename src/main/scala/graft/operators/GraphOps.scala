@@ -121,30 +121,10 @@ object GraphOps {
     // cust ids are even / supp ids odd, so no reversed pair collides.
     // The iteration joins consume this through ONE exchange that AQE
     // reuses across iterations (ReusedExchange).
-    val edges0 = co.select(explode(array(
+    val edges = co.select(explode(array(
         struct(col("a"), col("b")),
         struct(col("b").as("a"), col("a").as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
-    // r16 experiment (VERDICT r15 #5): optionally materialize the
-    // SYMMETRIZED 16-byte pairs once per session (ProjectionCache) so
-    // each iteration scans a flat parquet instead of re-running the
-    // explode above the directed pin. Measured at sf10 solo
-    // (docs/BENCH_NOTES.md round-16): on the r16 memory-starved host
-    // ON is reliably faster (331-337 s vs 475-508 s cold) BECAUSE the
-    // parquet scan replaces the explode's in-memory row fan and the
-    // smaller heap footprint dodges the host's 0.05 GB/s first-touch
-    // tax; on a normally-backed box the explode-over-pin form carried
-    // r15's 49 s in-suite number and the cache only adds a ~2 GB
-    // build write. DEFAULT OFF (the healthy-box choice, and the
-    // committed sf0.1 contract's plan); the knob is the deployment
-    // lever — on a real cluster a shared-FS edge artifact also buys
-    // MULTI-SESSION reuse, which no block cache covers.
-    val edges =
-      if (orders.sparkSession.conf
-          .get("spark.graft.graph.symEdgesCache", "false").toBoolean)
-        graft.plans.ProjectionCache(
-          "gsym", "spark.graft.graph.symEdgesCache", edges0)
-      else edges0
     val deg = graft.plans.PlanPins.lazyPin(
       edges.groupBy("a").agg(count(lit(1)).as("deg"))
         .withColumnRenamed("a", "node"))

@@ -104,12 +104,14 @@ trait PubsubPublisherApi {
   * a mocked [[PubsubSubscriberApi]], the reference's own strategy.
   * Pub/Sub deadlines are wall-clock, so `nowMicros` is wall time.
   *
-  * Scale shape: ONE adapter instance runs on the driver (or a daemon
-  * feeding a BusService); executor read tasks receive (offset range,
-  * payload) via the normal DSv2 partition planning. The source reads the
-  * end, i.e. pulls, once per trigger, after acking the last batch, so
-  * with `pullBatch` ≤ `bulkLimit` the buffer holds at most the batch in
-  * flight and one pull: memory is bounded by batch size, never the topic. */
+  * Scale shape: the receive buffer lives in the JVM that pulled, and
+  * read tasks resolve the adapter through [[BusFactories]] on their own
+  * JVM; partition planning hands them offset ranges, never payloads. So
+  * the adapter works in local mode only: an executor JVM would resolve
+  * its own empty adapter. The source reads the end, i.e. pulls, once per
+  * trigger, after acking the last batch, so with `pullBatch` ≤
+  * `bulkLimit` the buffer holds at most the batch in flight and one
+  * pull: memory is bounded by batch size, never the topic. */
 final class GcpPubsubBus(project: String,
                          subscriber: PubsubSubscriberApi,
                          publisher: PubsubPublisherApi,
@@ -176,7 +178,9 @@ final class GcpPubsubBus(project: String,
       val acked = s.buffered.take(n)
       subscriber.acknowledge(subPath(name), acked.map(_.ackId).toSeq)
       s.buffered.remove(0, n)
-      s.base += n
+      // a fresh adapter acked at a restarted checkpoint's offset has
+      // buffered nothing yet, and must still move to that offset
+      s.base = upTo
       // the advancing ack ends the work the lease protected (the
       // BusCore contract, incl. the stale-commit guard via upTo check)
       s.leaseHolder = null

@@ -127,12 +127,16 @@ final class ProjectionMaintenance(
     * for the spec's direct replay test; the streaming query calls it
     * per micro-batch. Skips already-applied batchIds (replay after
     * crash-before-checkpoint re-runs the same id). */
-  private[streaming] def applyBatch(orders: DataFrame, batchId: Long): Unit = {
-    if (batchId <= state.lastApplied()) return
-    // lineage lands before the first commit, not after start() returns
-    // (ADVICE r17: the post-start persist left a crash window in which
-    // a committed v0 had no identity and the guard passed silently)
-    state.persistIdentityFromCheckpoint(checkpointDir)
+  private[streaming] def applyBatch(orders: DataFrame, batchId: Long): Unit =
+    if (state.applyOnce(batchId, checkpointDir)(fold(orders, batchId)))
+      // retire catalog entries for versions the commit's retention GC just
+      // deleted from disk (the table metadata would otherwise dangle)
+      (math.max(0L, batchId - keepVersions - 8) to batchId - keepVersions)
+        .foreach(v => spark.sql(s"DROP TABLE IF EXISTS ${tableName(v)}"))
+
+  /** Write `v{batchId}`: the committed state merged with the batch's
+    * pair support. */
+  private def fold(orders: DataFrame, batchId: Long): Unit = {
     // explode the basket messages back to lineitem shape and run the
     // SAME pairSupport the batch rebuild uses — one code path, so the
     // spec's append ≡ rebuild equality is structural, not coincidental
@@ -203,11 +207,6 @@ final class ProjectionMaintenance(
           .drainListenerBus(spark.sparkContext)
         spark.sparkContext.removeSparkListener(listener)
       }
-    state.commit(batchId)
-    // retire catalog entries for versions the commit's retention GC just
-    // deleted from disk (the table metadata would otherwise dangle)
-    (math.max(0L, batchId - keepVersions - 8) to batchId - keepVersions)
-      .foreach(v => spark.sql(s"DROP TABLE IF EXISTS ${tableName(v)}"))
     lastFoldShuffle.set((shufRecs.get, shufBytes.get))
     logInfo(
       f"[projection-maintenance] batch $batchId: merged state rows $rows, " +
@@ -230,10 +229,6 @@ final class ProjectionMaintenance(
     val src = Pipeline.busStream(spark, subscription, busSpec, serde, "bulkLimit" -> bulkLimit)
       .select(col("payload.l_orderkey").as("l_orderkey"),
         col("payload.parts").as("parts"))
-    val q = Pipeline.startQuery(src, checkpointDir, availableNow)(applyBatch)
-    // q.id IS the checkpoint's persistent query id (Spark writes it to
-    // checkpointDir/metadata at first start and reuses it after)
-    state.persistIdentity(q.id.toString)
-    q
+    Pipeline.startQuery(src, checkpointDir, availableNow)(applyBatch)
   }
 }

@@ -5,44 +5,64 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 /** The versioned-parquet state-dir protocol shared by the incremental
   * maintainers ([[ProjectionMaintenance]] for the co-purchase pair
   * support, [[MinhashMaintenance]] for the near-dup signature store +
-  * pairs): immutable `v{batchId}` version paths, an atomically-replaced
-  * `_current` pointer file (temp + ATOMIC_MOVE — readers resolve the
-  * pointer and scan exactly one version; a crash mid-write leaves a
-  * dangling unreferenced dir, never a torn state), a `_query_id`
-  * checkpoint-identity file (a deleted/replaced checkpoint restarts
-  * Structured Streaming batchIds at 0, which the replay guard would
-  * read as stale — the identity mismatch fails LOUDLY at start instead
-  * of silently dropping every new append), and retention GC (committed
-  * versions older than the `keepVersions` most recent are deleted after
-  * each commit; keepVersions >= 2 leaves the previous version for
-  * readers that resolved the pointer just before the commit, and
-  * versions NEWER than the pointer — crash orphans or a concurrent
-  * committer's in-flight write — are never touched). Factored out of
-  * ProjectionMaintenance in r17 so the minhash maintainer rides the
-  * identical commit/replay/lineage machinery instead of a second copy
-  * that could drift. A real lakehouse would swap the pointer file for a
-  * table format's transaction log; the shape (immutable versions +
-  * atomic pointer + retention + lineage identity) is the same. */
+  * pairs): immutable `v{batchId}` version paths and ONE commit record,
+  * the `_current` pointer file. A commit writes
+  * `"<batchId> <checkpoint query id>"` to a temp file and moves it over
+  * the pointer with ATOMIC_MOVE, so the state's version and its lineage
+  * land in one atomic write: readers resolve the pointer and scan
+  * exactly one version, and a crash mid-write leaves a dangling
+  * unreferenced dir, never a torn state or a state without its identity.
+  * The id is the checkpoint's Structured Streaming query id (absent when
+  * the checkpoint has no metadata, as in direct `applyBatch` replays). A
+  * deleted/replaced checkpoint restarts batchIds at 0, which the replay
+  * skip would read as stale; [[guardIdentity]] compares the recorded id
+  * with the checkpoint's and fails LOUDLY at start instead of silently
+  * dropping every new append. A start that dies before its first fold
+  * records nothing, so it cannot tie the state to its checkpoint.
+  *
+  * Retention GC: committed versions older than the `keepVersions` most
+  * recent are deleted after each commit; keepVersions >= 2 leaves the
+  * previous version for readers that resolved the pointer just before
+  * the commit, and versions NEWER than the pointer — crash orphans or a
+  * concurrent committer's in-flight write — are never touched. A real
+  * lakehouse would swap the pointer file for a table format's
+  * transaction log; the shape (immutable versions + one atomic commit
+  * record + retention) is the same. */
 private[streaming] final class VersionedStateDir(
     stateDir: String, keepVersions: Int) {
-  import VersionedStateDir._
+  private val PointerFile = "_current"
+
+  /** The commit record: (last folded batchId, its checkpoint query id);
+    * (-1, None) for an empty state. */
+  private def pointer(): (Long, Option[String]) = {
+    val p = Paths.get(stateDir, PointerFile)
+    if (!Files.exists(p)) (-1L, None)
+    else Files.readString(p).trim.split(" ", 2) match {
+      case Array(b, id) => (b.toLong, Some(id))
+      case Array(b) => (b.toLong, None)
+    }
+  }
 
   /** Largest batchId already folded into the state (-1 = empty). */
-  def lastApplied(): Long = {
-    val p = Paths.get(stateDir, PointerFile)
-    if (Files.exists(p)) Files.readString(p).trim.toLong else -1L
-  }
+  def lastApplied(): Long = pointer()._1
 
   def versionPath(batchId: Long): String = s"$stateDir/v$batchId"
 
-  /** Commit `batchId`: atomically advance the pointer, then GC stale
-    * committed versions. The caller must have finished writing every
-    * table under [[versionPath]] before calling. */
-  def commit(batchId: Long): Unit = {
+  /** Fold `batchId` exactly once: skip it when the state already holds
+    * it (Structured Streaming replays a batch under the SAME batchId
+    * after a crash between state commit and checkpoint), else run
+    * `fold`, which must finish writing every table under
+    * [[versionPath]], then commit. False for a skipped replay. */
+  def applyOnce(batchId: Long, checkpointDir: String)(fold: => Unit): Boolean =
+    batchId > lastApplied() && { fold; commit(batchId, checkpointDir); true }
+
+  /** Atomically replace the commit record, then GC stale versions. */
+  private def commit(batchId: Long, checkpointDir: String): Unit = {
     val dir = Paths.get(stateDir)
     Files.createDirectories(dir)
     val tmp = dir.resolve(s".$PointerFile.tmp")
-    Files.writeString(tmp, batchId.toString)
+    Files.writeString(tmp,
+      (batchId.toString +: checkpointQueryId(checkpointDir).toSeq).mkString(" "))
     Files.move(tmp, dir.resolve(PointerFile),
       StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
@@ -73,9 +93,10 @@ private[streaming] final class VersionedStateDir(
 
   /** The streaming-query id recorded in a checkpoint's metadata file
     * (None for a fresh checkpoint). Structured Streaming assigns one id
-    * per checkpoint and keeps it across restarts; a deleted/replaced
+    * per checkpoint, writes it when the query is constructed (before the
+    * first batch) and keeps it across restarts; a deleted/replaced
     * checkpoint gets a NEW id and restarts batchIds at 0. */
-  def checkpointQueryId(checkpointDir: String): Option[String] = {
+  private def checkpointQueryId(checkpointDir: String): Option[String] = {
     val p = Paths.get(checkpointDir, "metadata")
     if (!Files.exists(p)) None
     else """"id"\s*:\s*"([^"]+)"""".r
@@ -88,9 +109,7 @@ private[streaming] final class VersionedStateDir(
     * alternative is batchIds restarting at 0 and every new append
     * skipping as a "replay". */
   def guardIdentity(checkpointDir: String): Unit = {
-    val idFile = Paths.get(stateDir, IdentityFile)
-    val stored =
-      if (Files.exists(idFile)) Some(Files.readString(idFile).trim) else None
+    val (last, stored) = pointer()
     (stored, checkpointQueryId(checkpointDir)) match {
       case (Some(s), Some(c)) if s != c =>
         throw new IllegalStateException(
@@ -99,7 +118,7 @@ private[streaming] final class VersionedStateDir(
             "checkpoint restarts batchIds at 0 and the replay guard " +
             "would silently drop every new append. Point the maintainer " +
             "at the original checkpoint, or start a fresh state dir.")
-      case (None, Some(c)) if lastApplied() >= 0 =>
+      case (None, Some(c)) if last >= 0 =>
         throw new IllegalStateException(
           s"state dir $stateDir has committed versions but no recorded " +
             s"checkpoint identity, while $checkpointDir belongs to query " +
@@ -107,7 +126,7 @@ private[streaming] final class VersionedStateDir(
             "been built under a different, since-replaced checkpoint). " +
             "Refusing to start; rebuild the state or restore the " +
             "original checkpoint+identity pair.")
-      case (Some(s), None) if lastApplied() >= 0 =>
+      case (Some(s), None) =>
         throw new IllegalStateException(
           s"state dir $stateDir (built under checkpoint query id $s) is " +
             s"non-empty but $checkpointDir has no metadata — the " +
@@ -117,33 +136,4 @@ private[streaming] final class VersionedStateDir(
       case _ => ()
     }
   }
-
-  /** Persist the checkpoint's query id if its metadata file already
-    * exists (Structured Streaming writes it when the query object is
-    * constructed, BEFORE the first batch runs). Maintainers call this at
-    * the top of every batch fold so the identity lands before the first
-    * state commit — a crash between v0's commit and a post-start
-    * persist would otherwise leave a committed state with no lineage,
-    * which a later start against a fresh checkpoint would silently
-    * accept (ADVICE r17). No-op for direct spec replays (no metadata). */
-  def persistIdentityFromCheckpoint(checkpointDir: String): Unit =
-    checkpointQueryId(checkpointDir).foreach(persistIdentity)
-
-  /** Record the checkpoint's query id on first start (no-op after). */
-  def persistIdentity(queryId: String): Unit = {
-    val dir = Paths.get(stateDir)
-    Files.createDirectories(dir)
-    val idFile = dir.resolve(IdentityFile)
-    if (!Files.exists(idFile)) {
-      val tmp = dir.resolve(s".$IdentityFile.tmp")
-      Files.writeString(tmp, queryId)
-      Files.move(tmp, idFile, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-}
-
-private[streaming] object VersionedStateDir {
-  private[streaming] val PointerFile = "_current"
-  private[streaming] val IdentityFile = "_query_id"
 }

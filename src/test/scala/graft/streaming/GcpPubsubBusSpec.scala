@@ -288,4 +288,43 @@ class GcpPubsubBusSpec extends AnyFunSuite {
         s"${fake.maxOutstanding} messages pulled and unacked at once")
     } finally BusFactories.unregister("gcpbuf")
   }
+
+  test("a restart resumes at the checkpoint's offset: every acked message was published") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.StructType
+    val fake = freshFake("in", "sub")
+    fake.createTopic("projects/p/topics/out")
+    val pullBatch = 10
+    def register(): Unit = BusFactories.register("gcprestart",
+      spec => new GcpPubsubBus(spec.stripPrefix("gcprestart://"), fake, fake, pullBatch))
+    def publish(r: Range): Unit = r.foreach(i => fake.publish(
+      "projects/p/topics/in", s"""{"v":"m$i"}""".getBytes(UTF_8), Map.empty))
+    val ckpt = Files.createTempDirectory("graft-gcp-ckpt").toString
+    def pipeline() = new Pipeline(
+      spark, "sub", "out", JsonSerde(new StructType().add("v", "string")),
+      df => df.select(col("payload.*")), ckpt,
+      bulkLimit = pullBatch, busSpec = "gcprestart://p")
+    register()
+    try {
+      publish(1 to 20)
+      assert(pipeline().start(availableNow = true).awaitTermination(60000))
+      assert(fake.payloadsOf("projects/p/topics/out").size == 10)
+      assert(fake.ackedCount("projects/p/topics/in") == 10)
+      // a restart: the old adapter and its receive buffer are gone
+      BusFactories.unregister("gcprestart")
+      register()
+      publish(21 to 40)
+      val q = pipeline().start()
+      try {
+        val t0 = System.currentTimeMillis
+        while (fake.ackedCount("projects/p/topics/in") < 40 && q.exception.isEmpty &&
+          System.currentTimeMillis - t0 < 60000) Thread.sleep(50)
+      } finally q.stop()
+      assert(q.exception.isEmpty)
+      assert(fake.ackedCount("projects/p/topics/in") == 40)
+      val out = fake.payloadsOf("projects/p/topics/out")
+      assert(out.distinct.size == 40,
+        s"40 acked but ${out.distinct.size} distinct messages published")
+    } finally BusFactories.unregister("gcprestart")
+  }
 }

@@ -228,6 +228,41 @@ class ProjectionMaintenanceSpec extends SparkSpec {
     assert(q4.awaitTermination(60000), "AvailableNow drain timed out")
   }
 
+  test("a first start that fails before any fold does not lock the state to its checkpoint") {
+    val id = java.util.UUID.randomUUID().toString.take(8)
+    val topic = s"pmlock-in-$id"; val sub = s"pmlock-sub-$id"
+    InMemoryBus.createTopic(topic)
+    InMemoryBus.createSubscription(topic, sub)
+    def publish(os: Seq[(Long, Seq[Long])]): Unit = os.foreach { case (o, ps) =>
+      InMemoryBus.publish(topic,
+        s"""{"l_orderkey":$o,"parts":[${ps.mkString(",")}]}""".getBytes(UTF_8))
+    }
+    val (stateDir, ckptA) = freshDirs()
+    // checkpoint A: every pull fails past the retry budget, so the query
+    // dies in latestOffset with its metadata written and nothing folded
+    InMemoryBus.failNextPulls(sub, 10)
+    val qA = new ProjectionMaintenance(spark, sub, stateDir, ckptA)
+      .start(availableNow = true)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      qA.awaitTermination(60000))
+    InMemoryBus.failNextPulls(sub, 0)
+    // checkpoint B builds the whole state
+    publish(orders.take(6))
+    val ckptB = Files.createTempDirectory("pm-ckpt-b-").toString
+    val mB = new ProjectionMaintenance(spark, sub, stateDir, ckptB, bulkLimit = 100)
+    assert(mB.lastApplied() == -1L)
+    assert(mB.start(availableNow = true).awaitTermination(60000),
+      "AvailableNow drain timed out")
+    assert(stateRows(mB) == rebuild(orders.take(6)))
+    // a restart on B starts and folds the next append
+    publish(orders.drop(6))
+    val mB2 = new ProjectionMaintenance(spark, sub, stateDir, ckptB, bulkLimit = 100)
+    assert(mB2.start(availableNow = true).awaitTermination(60000),
+      "AvailableNow drain timed out")
+    assert(stateRows(mB2) == rebuild(orders))
+    assert(!Files.exists(java.nio.file.Paths.get(stateDir, "_query_id")))
+  }
+
   test("graph_copurchase_incr: the batched fold equals the one-shot rebuild") {
     val li = lineitemShaped(orders)
     val incr = GraphOps.coPurchaseIncremental(li, nBatches = 4, minSupport = 2)
